@@ -32,18 +32,18 @@ Spark-first shapes:
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .similarity import (
+    _all_cell_paths,
     _apply_allow,
+    _apply_deny,
     _as_double,
     _cell_paths,
     _deny_info,
-    _exact_scores,
+    _dot,
     _probe_cells,
     space_score_col,
 )
@@ -223,12 +223,25 @@ def nested_expand(
     )
 
 
-def _all_cell_paths(index_dir: str) -> list[str]:
-    from .similarity import _live_cell_dirs, _recover_cell_swaps
-
-    root = os.path.join(index_dir, "cells")
-    _recover_cell_swaps(root)
-    return [os.path.join(root, d) for d in _live_cell_dirs(root)]
+def _exact_scores(
+    spark, paths, qv, space, score_name, extra_filter=None,
+    filter_ids=None, deny=None,
+) -> DataFrame:
+    """(vec_id, <score>) Catalyst float64 scores of the child vectors
+    under ``paths`` against ``qv``, allow-list and tombstones applied."""
+    q = F.array(*[F.lit(float(x)) for x in qv])
+    qn = F.lit(float(np.linalg.norm(qv)))
+    df = spark.read.schema(
+        "vec_id long, v array<double>, norm double"
+    ).parquet(*paths)
+    if extra_filter is not None:
+        df = df.filter(extra_filter)
+    df = _apply_deny(_apply_allow(df, filter_ids), deny)
+    if space == "cosine":
+        score = _dot(F.col("v"), q) / (F.col("norm") * qn)
+    else:
+        score = space_score_col(F.col("v"), q, space, vnorm=F.col("norm"))
+    return df.select("vec_id", score.alias(score_name))
 
 
 def ivf_query_nested(

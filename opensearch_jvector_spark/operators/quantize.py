@@ -102,10 +102,17 @@ def adc_table(qv: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
 
 
 def adc_scores(codes: np.ndarray, T: np.ndarray) -> np.ndarray:
-    """Approximate dot products for uint8 codes (b, m) via the ADC
-    table (m, n_codes)."""
-    m = T.shape[0]
-    return T[np.arange(m)[None, :], codes.astype(np.int64)].sum(axis=1)
+    """Approximate dot products (b, nq) of uint8 codes (b, m) against a
+    stack of ADC tables (nq, m, n_codes) — one flat gather for every
+    query."""
+    nq, m, n_codes = T.shape
+    flat = (np.arange(m) * n_codes + codes.astype(np.int64)).ravel()
+    return (
+        T.reshape(nq, m * n_codes)[:, flat]
+        .reshape(nq, len(codes), m)
+        .sum(axis=2)
+        .T
+    )
 
 
 # ---- int8 scalar quantization (C3 analog) ----
@@ -126,10 +133,14 @@ def sq_encode(M: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return codes, scales
 
 
-def sq_scores(codes: np.ndarray, scales: np.ndarray, qv: np.ndarray) -> np.ndarray:
-    """Approximate dot products: (int8 codes @ q) * scale — one matmul
-    per batch, float64 accumulate."""
-    return (codes.astype(np.float64) @ qv) * scales
+def sq_scores(
+    codes: np.ndarray, scales: np.ndarray, Qs: np.ndarray
+) -> np.ndarray:
+    """Approximate dot products (b, nq): (int8 codes . q) * scale for
+    every query row of ``Qs``, float64 accumulate. einsum, not a BLAS
+    gemm, so identical codes always get identical scores."""
+    dots = np.einsum("ij,kj->ik", codes.astype(np.float64), Qs)
+    return dots * scales[:, None]
 
 
 # ---- 1-bit binary quantization (OneBitScalarQuantizer analog) ----

@@ -117,12 +117,9 @@ def _cells_dir_sig(cells_dir: str):
     on the driver-local per-op path, where a per-cell scandir measured
     ~0.3 ms/op at 128 cells). The parent mtime moves when cell dirs are
     added/removed (build, compaction swaps, recluster splits) but NOT
-    when appends add files inside existing cells — so the memoized
-    small/large verdict can go stale across appends. That staleness is
-    SAFE by construction: both verdicts yield correct answers (exact
-    full scan strictly dominates probed recall; probed is the intended
-    approximation), only the switchover point drifts until the next
-    structural change or process restart."""
+    when files land inside existing cells, so ``ivf_append`` drops the
+    in-process memo and touches the directory itself — other processes
+    then see a new signature too."""
     try:
         st = os.stat(cells_dir)
         return (st.st_mtime_ns, st.st_ino)
@@ -130,8 +127,9 @@ def _cells_dir_sig(cells_dir: str):
         return None
 
 
-def _index_smaller_than(index_dir: str, threshold: int) -> int | None:
-    """Row count of the index when it is at most ``threshold``, else
+def _index_smaller_than(index_dir: str, threshold: int | None) -> int | None:
+    """Row count of the index when it is at most ``threshold`` (None =
+    ``APPROXIMATE_THRESHOLD``, 0 disables the switch), else
     None — decided from parquet FOOTERS with an EARLY EXIT: the walk
     stops the moment the running count exceeds the threshold, so a
     billion-row index pays a handful of footer reads, never a full
@@ -139,10 +137,15 @@ def _index_smaller_than(index_dir: str, threshold: int) -> int | None:
     index is big). Tombstoned ids still count toward size — the switch
     mirrors the reference's segment-size rule (KNNSettings.java:70),
     which consults doc counts, not live docs; the exact pass still
-    masks tombstones. Memoized per cells-dir signature."""
+    masks tombstones. Memoized per cells-dir signature, taken after an
+    interrupted compaction swap is recovered so the count never sees a
+    transiently missing or leftover cell."""
+    if threshold is None:
+        threshold = APPROXIMATE_THRESHOLD
     if threshold <= 0:
         return None
     cells_dir = os.path.join(index_dir, "cells")
+    _recover_cell_swaps(cells_dir)
     sig = _cells_dir_sig(cells_dir)
     if sig is None:
         return None
@@ -180,46 +183,6 @@ def _index_smaller_than(index_dir: str, threshold: int) -> int | None:
     return None if exceeded else rows
 
 
-def exact_query_all(
-    spark,
-    index_dir: str,
-    query_vec: list[float],
-    k: int,
-    space: str = "cosine",
-    filter_ids=None,
-    min_score: float | None = None,
-) -> DataFrame:
-    """Exact search over the WHOLE index — the small-index bypass
-    target (approximate_threshold, KNNSettings.java:70): every live
-    cell is scanned and scored at full precision, tombstones and any
-    allow-list still mask. Only reached when the index has at most
-    ``approximate_threshold`` rows, so the full scan is bounded by
-    construction. ``min_score`` switches top-k to radial."""
-    qv = np.asarray(query_vec, dtype=np.float64)
-    cells_dir = os.path.join(index_dir, "cells")
-    if os.path.isdir(cells_dir):
-        _recover_cell_swaps(cells_dir)
-    paths = [
-        os.path.join(cells_dir, d) for d in _live_cell_dirs(cells_dir)
-    ]
-    score_name = "cos" if space == "cosine" else "score"
-    if not paths:
-        return spark.createDataFrame(
-            [], f"vec_id long, {score_name} double, rank int"
-        )
-    scored = _exact_scores(
-        spark, paths, qv, space, score_name, filter_ids=filter_ids,
-        deny=_deny_info(index_dir),
-    )
-    if min_score is not None:
-        scored = scored.filter(F.col(score_name) >= min_score)
-        w = Window.orderBy(F.desc(score_name), F.asc("vec_id"))
-        return scored.withColumn("rank", F.row_number().over(w)).select(
-            "vec_id", F.round(score_name, 6).alias(score_name), "rank"
-        )
-    return _rank_topk(scored, k, score_name)
-
-
 def _allow_ids_if_small(filter_ids, threshold: int) -> list[int] | None:
     """The allow-list as a sorted id list when its cardinality is at
     most ``threshold``, else None (stay on the probed-IVF path). A
@@ -239,124 +202,6 @@ def _allow_ids_if_small(filter_ids, threshold: int) -> list[int] | None:
         return sorted(int(r["vec_id"]) for r in rows)
     ids = sorted({int(x) for x in filter_ids})
     return ids if len(ids) <= threshold else None
-
-
-def filtered_exact_query(
-    spark,
-    index_dir: str,
-    query_vec: list[float],
-    k: int,
-    allow_ids: list[int],
-    space: str = "cosine",
-    min_score: float | None = None,
-) -> DataFrame:
-    """Exact top-k over EXACTLY the allowed ids — the small-filter
-    fallback (VectorIdsKNNIterator.java:23-112: score every filtered
-    doc, no graph/probe approximation). The scan covers every live
-    cell directory but carries a pushed-down ``vec_id IN (...)``
-    predicate, so parquet row-group pruning bounds the bytes read by
-    the allow-list, not the corpus. Tombstones still mask (deletes
-    win over filters). Perfect recall by construction.
-
-    Scale note: at very large cell counts a (vec_id -> cell) locator
-    table would prune directories too; the pushdown already keeps the
-    data-page read proportional to the filter, which is the term that
-    matters."""
-    qv = np.asarray(query_vec, dtype=np.float64)
-    cells_dir = os.path.join(index_dir, "cells")
-    if os.path.isdir(cells_dir):
-        _recover_cell_swaps(cells_dir)
-    paths = [
-        os.path.join(cells_dir, d) for d in _live_cell_dirs(cells_dir)
-    ]
-    score_name = "cos" if space == "cosine" else "score"
-    if not paths or not allow_ids:
-        return spark.createDataFrame(
-            [], f"vec_id long, {score_name} double, rank int"
-        )
-    scored = _exact_scores(
-        spark, paths, qv, space, score_name,
-        extra_filter=F.col("vec_id").isin([int(x) for x in allow_ids]),
-        deny=_deny_info(index_dir),
-    )
-    if min_score is not None:  # radial form: threshold, not top-k
-        scored = scored.filter(F.col(score_name) >= min_score)
-        w = Window.orderBy(F.desc(score_name), F.asc("vec_id"))
-        return scored.withColumn("rank", F.row_number().over(w)).select(
-            "vec_id", F.round(score_name, 6).alias(score_name), "rank"
-        )
-    return _rank_topk(scored, k, score_name)
-
-
-def _filtered_exact_batch(
-    spark, index_dir: str, qids: list, Q: np.ndarray,
-    allow_ids: list[int] | None, k: int, space: str, filter_ids=None,
-) -> DataFrame:
-    """Batch form of the small-filter exact fallback: ONE pushdown read
-    of the allowed ids, one kernel scoring every query against every
-    allowed vector (the allow-list is <= threshold rows, so the full
-    query-cross-allow score matrix is small by construction).
-    ``allow_ids=None`` is the small-INDEX bypass form
-    (approximate_threshold, KNNSettings.java:70): the whole index is
-    scanned — bounded by the threshold — with any large ``filter_ids``
-    allow-list still masking candidates."""
-    cells_dir = os.path.join(index_dir, "cells")
-    if os.path.isdir(cells_dir):
-        _recover_cell_swaps(cells_dir)
-    paths = [
-        os.path.join(cells_dir, d) for d in _live_cell_dirs(cells_dir)
-    ]
-    score_name = "cos" if space == "cosine" else "score"
-    out_schema = f"query_id string, vec_id long, {score_name} double"
-    if not paths or (allow_ids is not None and not allow_ids):
-        return spark.createDataFrame([], out_schema + ", rank int")
-    qnorms = np.linalg.norm(Q, axis=1)
-    bc = spark.sparkContext.broadcast({"Q": Q, "qids": qids, "qn": qnorms})
-
-    def kernel(batches):
-        from ..functions.runtime import limit_worker_threads
-
-        limit_worker_threads()
-        state = bc.value
-        Qm, ids, qn = state["Q"], state["qids"], state["qn"]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = _stack_batch(pdf["v"], Qm.shape[1])
-            vids = pdf["vec_id"].to_numpy()
-            norms = pdf["norm"].to_numpy(dtype=np.float64)
-            S = _np_exact_batch(M, norms, Qm, qn, space)  # (b, nq)
-            out = {"query_id": [], "vec_id": [], score_name: []}
-            for j, qid in enumerate(ids):
-                out["query_id"].extend([qid] * len(vids))
-                out["vec_id"].extend(vids)
-                out[score_name].extend(S[:, j])
-            yield pd.DataFrame(out)
-
-    scan = spark.read.schema(
-        "vec_id long, v array<double>, norm double"
-    ).parquet(*paths)
-    if allow_ids is not None:
-        scan = scan.filter(
-            F.col("vec_id").isin([int(x) for x in allow_ids])
-        )
-    else:
-        scan = _apply_allow(scan, filter_ids)
-    scored = _apply_deny(scan, _deny_info(index_dir)).mapInPandas(
-        kernel, schema=out_schema
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(score_name), F.asc("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "vec_id",
-            F.round(score_name, 6).alias(score_name), "rank",
-        )
-    )
-
 
 def _apply_allow(df: DataFrame, filter_ids) -> DataFrame:
     """acceptDocs-style allow-list (reference: the ``filter`` sub-query
@@ -404,11 +249,7 @@ def topk_bruteforce(
     scored = e.select(
         "vec_id", space_score_col(F.col("v"), q, space).alias(score_name)
     )
-    topk = scored.orderBy(F.desc(score_name), F.asc("vec_id")).limit(k)
-    w = Window.orderBy(F.desc(score_name), F.asc("vec_id"))
-    return topk.withColumn("rank", F.row_number().over(w)).select(
-        "vec_id", F.round(score_name, 6).alias(score_name), "rank"
-    )
+    return _rank_topk(scored, k, score_name)
 
 
 def cosine_topk_bruteforce(
@@ -486,7 +327,7 @@ def rescore_first_pass_k(k: int, dim: int, overquery: int | None) -> int:
 
 
 def _proxy_from_dots(
-    dots: np.ndarray, norms: np.ndarray, qn: float, space: str
+    dots: np.ndarray, norms: np.ndarray, qn, space: str
 ) -> np.ndarray:
     """Candidate-ranking proxy from approximate dot products. The proxy
     must be MONOTONE in the exact score per space, else genuine top-k
@@ -495,16 +336,17 @@ def _proxy_from_dots(
       l2:     2*dot - |v|^2 (== -|v-q|^2 + const; raw dot is NOT
               monotone in l2 when vector norms vary — a far large-norm
               vector would outrank a true neighbor, round-3 ADVICE);
-      ip:     dot (the SpaceType ip translation is increasing in dot)."""
+      ip:     dot (the SpaceType ip translation is increasing in dot).
+    ``norms`` and ``qn`` broadcast against ``dots`` (rows x queries)."""
     if space == "cosine":
-        return dots / (np.where(norms == 0, 1.0, norms) * (qn or 1.0))
+        return dots / (
+            np.where(norms == 0, 1.0, norms) * np.where(qn == 0, 1.0, qn)
+        )
     if space == "l2":
         return 2.0 * dots - norms**2
     if space == "innerproduct":
         return dots
-    raise ValueError(
-        f"quantized pass supports {QUANTIZABLE_SPACES}, got {space!r}"
-    )
+    raise ValueError(f"no quantized proxy for space {space!r}")
 
 
 def _stack_batch(vs: pd.Series, expect_dim: int | None) -> np.ndarray:
@@ -1447,6 +1289,15 @@ def _apply_centroid_update(
         _build_coarse_layer(index_dir, new_cells, new_C)
 
 
+def _all_cell_paths(index_dir: str) -> list[str]:
+    """Every live cell directory, after swap recovery."""
+    cells_dir = os.path.join(index_dir, "cells")
+    _recover_cell_swaps(cells_dir)
+    if not os.path.isdir(cells_dir):
+        return []
+    return [os.path.join(cells_dir, d) for d in _live_cell_dirs(cells_dir)]
+
+
 def _cell_paths(index_dir: str, probe: list[int]) -> list[str]:
     cells_dir = os.path.join(index_dir, "cells")
     if os.path.isdir(cells_dir):
@@ -1467,6 +1318,410 @@ def _rank_topk(
     return topk.withColumn("rank", F.row_number().over(w)).select(
         id_col, F.round(score_name, 6).alias(score_name), "rank"
     )
+
+
+#: first-pass quantizers: name -> (the ivf_build option that stores its
+#: codes, the quantize.py loader of its trained state or None, the
+#: columns its first pass reads)
+_QUANTIZERS = {
+    "pq": ("pq_m", "load_codebooks", "norm double, code binary"),
+    "sq": ("sq", None, "norm double, sq_code binary, sq_scale double"),
+    "bq": ("bq", "load_bq", "bq_code binary"),
+    "msq": ("msq_bits", "load_msq", "msq_code binary"),
+}
+
+
+def _resolve_quantizer(
+    index_dir: str, space: str, use_pq=False, use_sq=False, use_bq=False,
+    use_msq=False,
+) -> tuple | None:
+    """The ``use_*`` flags as one (quantizer name, trained state), or
+    None for exact scoring — validated and loaded driver-side before
+    any Spark job runs."""
+    on = [
+        name for name, flag in zip(_QUANTIZERS, (use_pq, use_sq, use_bq,
+                                                 use_msq)) if flag
+    ]
+    if not on:
+        return None
+    if len(on) > 1:
+        raise ValueError("choose one of use_pq / use_sq / use_bq / use_msq")
+    name = on[0]
+    if name in ("bq", "msq"):
+        if space != "cosine":
+            raise ValueError(
+                "bit-quantized passes are angular (threshold-bit hamming) "
+                "proxies; cosine only"
+            )
+    elif space not in QUANTIZABLE_SPACES:
+        raise ValueError(
+            f"quantized pass supports {QUANTIZABLE_SPACES}, got {space!r}"
+        )
+    option, loader, _ = _QUANTIZERS[name]
+    state = None
+    if loader is not None:
+        from . import quantize
+
+        state = getattr(quantize, loader)(index_dir)
+        if state is None:
+            raise ValueError(f"index at {index_dir} was built without {option}")
+    return name, state
+
+
+def _encode_queries(name: str, state, Q: np.ndarray):
+    """Driver-side per-query operand of the first pass: PQ ADC tables
+    (nq, m, n_codes), BQ/MSQ packed query codes; SQ scores the raw
+    queries (None)."""
+    from .quantize import adc_table, bq_encode, msq_encode
+
+    if name == "pq":
+        return np.stack([adc_table(q, state) for q in Q])
+    if name == "bq":
+        return bq_encode(Q, state)
+    if name == "msq":
+        return msq_encode(Q, state)
+    return None
+
+
+def _first_pass(
+    name: str, grp: pd.DataFrame, enc, Qs: np.ndarray, qn: np.ndarray,
+    space: str,
+) -> np.ndarray:
+    """(rows, queries) candidate-ranking proxy of one cell group from
+    its codes alone, higher = closer; ``enc``/``Qs``/``qn`` hold the
+    group's queries. Identical codes always get identical proxies, so
+    the tie-safe cut keeps every duplicate of a tied candidate."""
+    from .quantize import adc_scores, bq_hamming, sq_scores
+
+    def codes(col, dtype, width):
+        return np.frombuffer(
+            b"".join(grp[col].to_numpy()), dtype=dtype
+        ).reshape(len(grp), width)
+
+    if name in ("bq", "msq"):
+        C = codes(f"{name}_code", np.uint8, enc.shape[1])
+        # fewer differing threshold bits = closer angle; negated for
+        # the shared desc ranking (the exact rerank restores true order)
+        H = np.stack([bq_hamming(C, qc) for qc in enc], axis=1)
+        return -H.astype(np.float64)
+    if name == "pq":
+        dots = adc_scores(codes("code", np.uint8, enc.shape[1]), enc)
+    else:
+        dots = sq_scores(
+            codes("sq_code", np.int8, Qs.shape[1]),
+            grp["sq_scale"].to_numpy(dtype=np.float64), Qs,
+        )
+    norms = grp["norm"].to_numpy(dtype=np.float64)
+    return _proxy_from_dots(dots, norms[:, None], qn[None, :], space)
+
+
+def _cut(S: np.ndarray, k: int, min_score: float | None) -> np.ndarray:
+    """Tie-safe per-query cut of a (rows, queries) score matrix: keep
+    every row scoring >= ``min_score`` (radial), else every row scoring
+    >= its query's kth best — never an arbitrary member of a tie, so
+    the later (score desc, vec_id asc) rank keeps the lowest tied ids
+    (the rule ``LocalIvfSearcher.query`` uses per cell)."""
+    if min_score is not None:
+        return S >= min_score
+    if k < 1:
+        return np.zeros(S.shape, dtype=bool)
+    if len(S) <= k:
+        return np.ones(S.shape, dtype=bool)
+    return S >= np.partition(S, len(S) - k, axis=0)[len(S) - k]
+
+
+def _scan_scores(
+    scan: DataFrame, qids: list, Q: np.ndarray, space: str, out: str,
+    keep: int, min_score: float | None = None, cell_to_q: dict | None = None,
+    quantizer: str | None = None, enc=None,
+) -> DataFrame:
+    """(query_id, vec_id, <out>) for every scanned row against the
+    queries that probed its cell (every query when ``cell_to_q`` is
+    None): exact scores, or the named ``quantizer``'s first-pass proxy
+    from the per-query operands ``enc``. One vectorized kernel per cell
+    group of each Arrow batch, and the tie-safe ``keep``/``min_score``
+    cut per query bounds what reaches the shuffle."""
+    qn = np.linalg.norm(Q, axis=1)
+    bc = scan.sparkSession.sparkContext.broadcast({
+        "Q": Q, "qids": np.asarray(qids, dtype=object), "qn": qn,
+        "c2q": cell_to_q, "enc": enc,
+    })
+
+    def kernel(batches):
+        from ..functions.runtime import limit_worker_threads
+
+        limit_worker_threads()
+        st = bc.value
+        Qm, ids, qn, c2q, enc = (
+            st["Q"], st["qids"], st["qn"], st["c2q"], st["enc"]
+        )
+        every = np.arange(len(Qm))
+        for pdf in batches:
+            frames = []
+            groups = pdf.groupby("cell") if c2q is not None else [(0, pdf)]
+            for cell, grp in groups:
+                idxs = every if c2q is None else c2q.get(int(cell))
+                if idxs is None or not len(grp):
+                    continue
+                if quantizer is None:
+                    S = _np_exact_batch(
+                        _stack_batch(grp["v"], Qm.shape[1]),
+                        grp["norm"].to_numpy(dtype=np.float64),
+                        Qm[idxs], qn[idxs], space,
+                    )
+                else:
+                    S = _first_pass(
+                        quantizer, grp, None if enc is None else enc[idxs],
+                        Qm[idxs], qn[idxs], space,
+                    )
+                r, c = np.nonzero(_cut(S, keep, min_score))
+                frames.append(pd.DataFrame({
+                    "query_id": ids[idxs[c]],
+                    "vec_id": grp["vec_id"].to_numpy()[r],
+                    out: S[r, c],
+                }))
+            if frames:
+                yield pd.concat(frames, ignore_index=True)
+
+    return scan.mapInPandas(
+        kernel, schema=f"query_id string, vec_id long, {out} double"
+    )
+
+
+def _rank_per_query(
+    scored: DataFrame, k: int, score_name: str,
+    min_score: float | None = None,
+) -> DataFrame:
+    """(query_id, vec_id, <score>, rank): the engine-wide (score desc,
+    vec_id asc) order per query, top ``k`` (or every row in the radial
+    form), scores rounded to 6 decimals."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(score_name), F.asc("vec_id")
+    )
+    ranked = scored.withColumn("rank", F.row_number().over(w))
+    if min_score is None:
+        ranked = ranked.filter(F.col("rank") <= k)
+    return ranked.select(
+        "query_id", "vec_id", F.round(score_name, 6).alias(score_name),
+        "rank",
+    )
+
+
+def _ivf_search(
+    spark,
+    index_dir: str,
+    qids: list,
+    Q: np.ndarray,
+    k: int,
+    *,
+    n_probe: int,
+    space: str,
+    quantizer: tuple | None,
+    overquery: int | None,
+    metrics: dict | None,
+    filter_ids,
+    filtered_exact_threshold: int,
+    approximate_threshold: int | None,
+    min_score: float | None = None,
+) -> DataFrame:
+    """The one Spark ANN query engine behind ``ivf_query``,
+    ``ivf_query_radial`` and ``ivf_query_batch``:
+    (query_id, vec_id, cos|score, rank) for the query matrix ``Q``.
+
+    Decisions, in order:
+      * an allow-list of at most ``filtered_exact_threshold`` ids
+        exact-scores exactly those ids in every cell (filtered_exact_
+        search_threshold, KNNSettings.java:87 — perfect recall where
+        probed-cell masking would lose allowed docs);
+      * an index of at most ``approximate_threshold`` rows
+        exact-scores the whole index (KNNSettings.java:70);
+      * otherwise each query probes its ``n_probe`` nearest cells and
+        each cell group's Arrow batches score only the queries that
+        probed it — exactly, or with ``quantizer`` a first pass over
+        the code columns alone keeps each query's best
+        ``rescore_first_pass_k`` candidates and one vec_id-pushdown
+        read reranks their union exactly (JVectorReader.search's
+        approximate-then-exact shape, JVectorReader.java:131-212).
+
+    Every exact score is ``_np_exact_batch``; ``min_score`` switches
+    the exact forms from top-k to radial. Tombstones mask every form;
+    ``filter_ids`` masks before any budget."""
+    score_name = "cos" if space == "cosine" else "score"
+    empty = f"query_id string, vec_id long, {score_name} double, rank int"
+    note = metrics if metrics is not None else {}
+    deny = _deny_info(index_dir)  # tombstoned ids never match (liveDocs)
+    full = "vec_id long, v array<double>, norm double"
+    small = _allow_ids_if_small(filter_ids, filtered_exact_threshold)
+    n_small = None
+    if small is None:
+        n_small = _index_smaller_than(index_dir, approximate_threshold)
+    if small is not None or n_small is not None:
+        if small is not None:
+            note.update(filtered_exact=True, filter_cardinality=len(small))
+        else:
+            note.update(approximate_bypassed=True, index_rows=n_small)
+        paths = _all_cell_paths(index_dir)
+        if not paths or small == []:
+            return spark.createDataFrame([], empty)
+        scan = spark.read.schema(full).parquet(*paths)
+        if small is not None:
+            scan = scan.filter(F.col("vec_id").isin(small))
+        else:
+            scan = _apply_allow(scan, filter_ids)
+        scored = _scan_scores(
+            _apply_deny(scan, deny), qids, Q, space, score_name, k, min_score
+        )
+        return _rank_per_query(scored, k, score_name, min_score)
+
+    cell_to_q: dict[int, list[int]] = {}
+    for i, q in enumerate(Q):
+        for c in _probe_cells(index_dir, q, n_probe, space, metrics=metrics):
+            cell_to_q.setdefault(c, []).append(i)
+    paths = _cell_paths(index_dir, sorted(cell_to_q))
+    if not paths:
+        return spark.createDataFrame([], empty)
+    cell_to_q = {c: np.asarray(v) for c, v in cell_to_q.items()}
+
+    def probed(cols: str) -> DataFrame:
+        scan = (
+            spark.read.schema(f"vec_id long, {cols}, cell int")
+            .option("basePath", os.path.join(index_dir, "cells"))
+            .parquet(*paths)
+        )
+        return _apply_deny(_apply_allow(scan, filter_ids), deny)
+
+    if quantizer is None:
+        scored = _scan_scores(
+            probed("v array<double>, norm double"), qids, Q, space,
+            score_name, k, min_score, cell_to_q,
+        )
+        return _rank_per_query(scored, k, score_name, min_score)
+
+    # pass 1: code columns only (column pruning keeps vector bytes on
+    # disk); the allow-list masks BEFORE the budget cut
+    name, state = quantizer
+    code_cols = _QUANTIZERS[name][2]
+    budget = rescore_first_pass_k(k, Q.shape[1], overquery)
+    approx = _scan_scores(
+        probed(code_cols), qids, Q, space, "a", budget, None, cell_to_q,
+        name, _encode_queries(name, state, Q),
+    )
+    cand_rows = (
+        _rank_per_query(approx, budget, "a")
+        .select("query_id", "vec_id").collect()
+    )
+    if metrics is not None:
+        metrics.update(_pq_bytes_metrics(
+            paths, len({r["vec_id"] for r in cand_rows}),
+            tuple(c.split()[0] for c in code_cols.split(", ")),
+        ))
+        metrics["n_queries"] = len(qids)
+        # the batch reads the code columns ONCE for all queries and
+        # reranks the (overlapping) candidate union once — the fair
+        # comparison with single-query cost is per-query AMORTIZED
+        # bytes: N single queries each pay the full approx pass
+        metrics["amortized_bytes_per_query"] = int(
+            metrics["bytes_scanned"] / max(1, len(qids))
+        )
+        metrics["amortized_compression_ratio"] = round(
+            metrics["unquantized_bytes"]
+            / max(1, metrics["amortized_bytes_per_query"]),
+            2,
+        )
+    if not cand_rows:
+        return spark.createDataFrame([], empty)
+    return _rank_per_query(
+        _rerank(spark, paths, qids, Q, space, score_name, cand_rows),
+        k, score_name,
+    )
+
+
+def _rerank(
+    spark, paths: list[str], qids: list, Q: np.ndarray, space: str,
+    score_name: str, cand_rows: list,
+) -> DataFrame:
+    """Pass 2: ONE exact read of the candidate union (vec_id
+    pushdown), each vector scored only for the queries that shortlisted
+    it. The (vec_id -> query list) map ships as CSR arrays so the
+    kernel gathers its (row, query) pairs fully vectorized."""
+    vid_to_q: dict[int, list[int]] = {}
+    qpos = {qid: i for i, qid in enumerate(qids)}
+    for r in cand_rows:
+        vid_to_q.setdefault(r["vec_id"], []).append(qpos[r["query_id"]])
+    uvids = np.array(sorted(vid_to_q), dtype=np.int64)
+    csr_cnt = np.array([len(vid_to_q[v]) for v in uvids], dtype=np.int64)
+    indptr = np.concatenate(([0], np.cumsum(csr_cnt)))
+    qidx = np.concatenate(
+        [np.asarray(vid_to_q[v], dtype=np.int64) for v in uvids]
+    )
+    bc = spark.sparkContext.broadcast(
+        {
+            "Q": Q, "qids": np.asarray(qids, dtype=object),
+            "qn": np.linalg.norm(Q, axis=1),
+            "uvids": uvids, "indptr": indptr, "qidx": qidx,
+        }
+    )
+
+    def rerank_kernel(batches):
+        from ..functions.runtime import limit_worker_threads
+
+        limit_worker_threads()
+        state = bc.value
+        Qm, ids, qn = state["Q"], state["qids"], state["qn"]
+        uv, ptr, qix = state["uvids"], state["indptr"], state["qidx"]
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            vids = pdf["vec_id"].to_numpy()
+            pos = np.searchsorted(uv, vids)
+            member = pos < len(uv)
+            member[member] = uv[pos[member]] == vids[member]
+            if not member.all():
+                raise RuntimeError(
+                    f"rerank scan returned {int((~member).sum())} vec_ids "
+                    "outside the candidate union"
+                )
+            cnt = ptr[pos + 1] - ptr[pos]
+            nsel = int(cnt.sum())
+            if nsel == 0:
+                continue
+            row_rep = np.repeat(np.arange(len(vids)), cnt)
+            base = np.repeat(np.cumsum(cnt) - cnt, cnt)
+            intra = np.arange(nsel, dtype=np.int64) - base
+            flat = qix[np.repeat(ptr[pos], cnt) + intra]
+            S = _np_exact_batch(
+                _stack_batch(pdf["v"], Qm.shape[1]),
+                pdf["norm"].to_numpy(dtype=np.float64), Qm, qn, space,
+                pairs=(row_rep, flat),
+            )
+            yield pd.DataFrame(
+                {"query_id": ids[flat], "vec_id": vids[row_rep], score_name: S}
+            )
+
+    union = [int(v) for v in uvids]
+    scan = spark.read.schema(
+        "vec_id long, v array<double>, norm double"
+    ).parquet(*paths)
+    if len(union) <= 1024:
+        # small union: an In() literal reaches the parquet scan as a
+        # pushed filter (row-group pruning)
+        scan = scan.filter(F.col("vec_id").isin(union))
+    else:
+        # large union: a 10k-literal In() bloats the plan and prunes
+        # nothing (ids are scattered across row groups anyway) — a
+        # broadcast semi-join filters JVM-side at scan speed
+        ids_df = spark.createDataFrame([(i,) for i in union], "vec_id long")
+        scan = scan.join(F.broadcast(ids_df), "vec_id", "left_semi")
+    return scan.mapInPandas(
+        rerank_kernel,
+        schema=f"query_id string, vec_id long, {score_name} double",
+    )
+
+
+def _single(df: DataFrame) -> DataFrame:
+    """A one-query engine result as (vec_id, cos|score, rank) rows in
+    rank order."""
+    return df.drop("query_id").coalesce(1).sortWithinPartitions("rank")
 
 
 def ivf_query(
@@ -1490,210 +1745,37 @@ def ivf_query(
     of a persisted IVF index and exact-score ONLY those cells'
     co-located vectors (the approximate-candidates-then-exact shape of
     JVectorReader.search). Query cost is O(probed lists), independent
-    of corpus size.
+    of corpus size. The batch-of-one case of ``ivf_query_batch``.
 
-    With ``use_pq`` (index built with ``pq_m``): the first pass reads
-    ONLY the M-byte ``code`` + ``norm`` columns of the probed cells
+    ``use_pq`` / ``use_sq`` / ``use_bq`` / ``use_msq`` (index built
+    with ``pq_m`` / ``sq`` / ``bq`` / ``msq_bits``) pick a compressed
+    first pass: it reads ONLY the code columns of the probed cells
     (parquet column pruning — the dominant cost at scale becomes code
-    bytes, not vector bytes), scores them against a broadcast ADC
-    table, keeps the best ``k * overquery`` candidates, then reranks
-    those few against full-precision vectors via a vec_id-pushdown
-    read (JVectorReader.java:154-182's rerank). ``metrics`` (optional
-    dict) receives bytes-scanned accounting for the compression win.
+    bytes, not vector bytes), keeps the best ``k * overquery``
+    candidates, then reranks those few against full-precision vectors
+    via a vec_id-pushdown read (JVectorReader.java:154-182's rerank).
+    ``metrics`` (optional dict) receives the switch decisions and the
+    bytes-scanned accounting for the compression win.
 
     ``filter_ids`` = filtered vector search (Q4 embedding side): the
-    allow-list masks candidates INSIDE the probed-cell scan — cell
-    pruning stays on, and with PQ/SQ the mask applies before the
-    k*overquery cut so filtered-out docs never eat the budget (the
-    acceptDocs-in-graph-search shape, JVectorReader.java:167-182).
-    When the allow-list cardinality is at most
-    ``filtered_exact_threshold`` the query bypasses IVF entirely and
-    exact-scores exactly the allowed ids (filtered_exact_search_
-    threshold, KNNSettings.java:87) — selective filters get PERFECT
-    recall instead of silently losing allowed docs whose cells were
-    not probed; pass 0 to disable the fallback.
-
-    ``approximate_threshold`` (None = module default
-    ``APPROXIMATE_THRESHOLD``; 0 disables): when the index itself has
-    at most this many rows, probing is pointless — the query
-    exact-scores the WHOLE index instead (the reference's
-    index.knn.advanced.approximate_threshold, KNNSettings.java:70,
-    default 15_000 at :104). Decided from parquet footers with an
-    early exit, so big indexes never pay a metadata sweep."""
-    small = _allow_ids_if_small(filter_ids, filtered_exact_threshold)
-    if small is not None:
-        if metrics is not None:
-            metrics["filtered_exact"] = True
-            metrics["filter_cardinality"] = len(small)
-        return filtered_exact_query(
-            spark, index_dir, query_vec, k, small, space
-        )
-    th_approx = (
-        APPROXIMATE_THRESHOLD
-        if approximate_threshold is None
-        else approximate_threshold
-    )
-    n_small = _index_smaller_than(index_dir, th_approx)
-    if n_small is not None:
-        if metrics is not None:
-            metrics["approximate_bypassed"] = True
-            metrics["index_rows"] = n_small
-        return exact_query_all(
-            spark, index_dir, query_vec, k, space, filter_ids=filter_ids
-        )
-    qv = np.asarray(query_vec, dtype=np.float64)
-    probe = _probe_cells(index_dir, qv, n_probe, space, metrics=metrics)
-    paths = _cell_paths(index_dir, probe)
-    deny = _deny_info(index_dir)  # tombstoned ids never match (liveDocs)
-    score_name = "cos" if space == "cosine" else "score"
-    if not paths:
-        return spark.createDataFrame(
-            [], f"vec_id long, {score_name} double, rank int"
-        )
-    if not (use_pq or use_sq or use_bq or use_msq):
-        scored = _exact_scores(
-            spark, paths, qv, space, score_name, filter_ids=filter_ids,
-            deny=deny,
-        )
-        return _rank_topk(scored, k, score_name)
-    if sum([use_pq, use_sq, use_bq, use_msq]) > 1:
-        raise ValueError("choose one of use_pq / use_sq / use_bq / use_msq")
-    if use_bq or use_msq:
-        if space != "cosine":
-            raise ValueError(
-                "bit-quantized passes are angular (threshold-bit hamming) "
-                "proxies; cosine only"
-            )
-    elif space not in QUANTIZABLE_SPACES:
-        raise ValueError(
-            f"quantized pass supports {QUANTIZABLE_SPACES}, got {space!r}"
-        )
-
-    qn = float(np.linalg.norm(qv))
-    if use_bq:
-        from .quantize import bq_encode, bq_hamming, load_bq
-
-        th = load_bq(index_dir)
-        if th is None:
-            raise ValueError(f"index at {index_dir} was built without bq")
-        qcode = bq_encode(qv[None, :], th)[0]
-        bcb = spark.sparkContext.broadcast(qcode)
-
-        @F.pandas_udf("double")
-        def approx_bq(codes: pd.Series) -> pd.Series:
-            q = bcb.value
-            Cb = np.frombuffer(
-                b"".join(codes.to_numpy()), dtype=np.uint8
-            ).reshape(len(codes), len(q))
-            # fewer differing sign bits = closer angle; negate so the
-            # shared desc ranking applies (exact rerank restores true
-            # cosine order among the survivors)
-            return pd.Series(-bq_hamming(Cb, q).astype(np.float64))
-
-        pass1_schema = "vec_id long, bq_code binary"
-        approx_col = approx_bq(F.col("bq_code"))
-        approx_cols = ("bq_code",)
-    elif use_msq:
-        from .quantize import load_msq, msq_encode, msq_hamming
-
-        th = load_msq(index_dir)
-        if th is None:
-            raise ValueError(
-                f"index at {index_dir} was built without msq_bits"
-            )
-        qcode = msq_encode(qv[None, :], th)[0]
-        bcm = spark.sparkContext.broadcast(qcode)
-
-        @F.pandas_udf("double")
-        def approx_msq(codes: pd.Series) -> pd.Series:
-            q = bcm.value
-            Cb = np.frombuffer(
-                b"".join(codes.to_numpy()), dtype=np.uint8
-            ).reshape(len(codes), len(q))
-            # fewer differing threshold bits (across all planes) =
-            # closer; negate for the shared desc ranking, exact rerank
-            # restores true order among survivors
-            return pd.Series(-msq_hamming(Cb, q).astype(np.float64))
-
-        pass1_schema = "vec_id long, msq_code binary"
-        approx_col = approx_msq(F.col("msq_code"))
-        approx_cols = ("msq_code",)
-    elif use_pq:
-        from .quantize import adc_scores, adc_table, load_codebooks
-
-        codebooks = load_codebooks(index_dir)
-        if codebooks is None:
-            raise ValueError(f"index at {index_dir} was built without pq_m")
-        T = adc_table(qv, codebooks)
-        bc = spark.sparkContext.broadcast(T)
-
-        @F.pandas_udf("double")
-        def approx(codes: pd.Series, norms: pd.Series) -> pd.Series:
-            Tm = bc.value
-            Cb = np.frombuffer(
-                b"".join(codes.to_numpy()), dtype=np.uint8
-            ).reshape(len(codes), Tm.shape[0])
-            dots = adc_scores(Cb, Tm)
-            return pd.Series(_proxy_from_dots(
-                dots, norms.to_numpy(dtype=np.float64), qn, space
-            ))
-
-        pass1_schema = "vec_id long, norm double, code binary"
-        approx_col = approx(F.col("code"), F.col("norm"))
-        approx_cols = ("code", "norm")
-    else:  # int8 scalar quantization (C3 analog)
-        from .quantize import sq_scores
-
-        bcq = spark.sparkContext.broadcast(qv)
-
-        @F.pandas_udf("double")
-        def approx_sq(codes: pd.Series, scales: pd.Series,
-                      norms: pd.Series) -> pd.Series:
-            q = bcq.value
-            Cb = np.frombuffer(
-                b"".join(codes.to_numpy()), dtype=np.int8
-            ).reshape(len(codes), len(q))
-            dots = sq_scores(Cb, scales.to_numpy(dtype=np.float64), q)
-            return pd.Series(_proxy_from_dots(
-                dots, norms.to_numpy(dtype=np.float64), qn, space
-            ))
-
-        pass1_schema = (
-            "vec_id long, norm double, sq_code binary, sq_scale double"
-        )
-        approx_col = approx_sq(
-            F.col("sq_code"), F.col("sq_scale"), F.col("norm")
-        )
-        approx_cols = ("sq_code", "sq_scale", "norm")
-
-    # pass 1: codes only (column pruning keeps vector bytes on disk);
-    # the allow-list masks BEFORE the overquery cut; the candidate
-    # budget defaults to the dimension-based rescore policy
-    budget = rescore_first_pass_k(k, len(qv), overquery)
-    cand_df = (
-        _apply_deny(
-            _apply_allow(
-                spark.read.schema(pass1_schema).parquet(*paths), filter_ids
-            ),
-            deny,
-        )
-        .select("vec_id", approx_col.alias("a"))
-        .orderBy(F.desc("a"), F.asc("vec_id"))
-        .limit(budget)
-    )
-    cand_ids = [r["vec_id"] for r in cand_df.collect()]
-    if metrics is not None:
-        metrics.update(_pq_bytes_metrics(paths, len(cand_ids), approx_cols))
-    if not cand_ids:
-        return spark.createDataFrame(
-            [], f"vec_id long, {score_name} double, rank int"
-        )
-    # pass 2: exact rerank of the survivors (vec_id pushdown filter)
-    scored = _exact_scores(
-        spark, paths, qv, space, score_name,
-        extra_filter=F.col("vec_id").isin(cand_ids),
-    )
-    return _rank_topk(scored, k, score_name)
+    allow-list masks candidates INSIDE the probed-cell scan, before the
+    k*overquery cut (the acceptDocs-in-graph-search shape,
+    JVectorReader.java:167-182). At most ``filtered_exact_threshold``
+    allowed ids bypass IVF and exact-score exactly those ids (pass 0 to
+    disable). ``approximate_threshold`` (None = module default
+    ``APPROXIMATE_THRESHOLD``; 0 disables): an index of at most this
+    many rows is exact-scored whole — decided from parquet footers with
+    an early exit, so big indexes never pay a metadata sweep."""
+    return _single(_ivf_search(
+        spark, index_dir, ["q"], np.asarray([query_vec], dtype=np.float64),
+        k, n_probe=n_probe, space=space,
+        quantizer=_resolve_quantizer(
+            index_dir, space, use_pq, use_sq, use_bq, use_msq
+        ),
+        overquery=overquery, metrics=metrics, filter_ids=filter_ids,
+        filtered_exact_threshold=filtered_exact_threshold,
+        approximate_threshold=approximate_threshold,
+    ))
 
 
 def radial_threshold(
@@ -1733,66 +1815,19 @@ def ivf_query_radial(
     every vector whose score clears the threshold, ordered best-first
     (reference: maxDistance/minScore radial queries,
     KNNQueryBuilder.java:438-472 + RNNQueryFactory.java; the BM25 side
-    already had this as ``bm25_radial``). A ``score >= t`` filter
-    replaces the top-k limit over the same exact probed-cell scoring
-    kernel; like the reference's radial path the result is approximate
-    in the same way IVF top-k is — only probed cells are searched.
-    Small allow-lists take the exact fallback (perfect recall), like
-    ``ivf_query``; small INDEXES likewise bypass probing entirely
-    (approximate_threshold, KNNSettings.java:70) — the whole index is
-    scored exactly and the radial cut applied to everything."""
-    qv = np.asarray(query_vec, dtype=np.float64)
+    already had this as ``bm25_radial``). The engine behind
+    ``ivf_query`` with a ``score >= t`` cut instead of the top-k limit;
+    like the reference's radial path the result is approximate in the
+    same way IVF top-k is — only probed cells are searched — and the
+    small-filter and small-index exact switches apply unchanged."""
     t = radial_threshold(space, min_score, max_distance)
-    small = _allow_ids_if_small(filter_ids, filtered_exact_threshold)
-    if small is not None:
-        return filtered_exact_query(
-            spark, index_dir, query_vec, k=0, allow_ids=small, space=space,
-            min_score=t,
-        )
-    th_approx = (
-        APPROXIMATE_THRESHOLD
-        if approximate_threshold is None
-        else approximate_threshold
-    )
-    if _index_smaller_than(index_dir, th_approx) is not None:
-        return exact_query_all(
-            spark, index_dir, query_vec, k=0, space=space,
-            filter_ids=filter_ids, min_score=t,
-        )
-    probe = _probe_cells(index_dir, qv, n_probe, space)
-    paths = _cell_paths(index_dir, probe)
-    score_name = "cos" if space == "cosine" else "score"
-    if not paths:
-        return spark.createDataFrame(
-            [], f"vec_id long, {score_name} double, rank int"
-        )
-    scored = _exact_scores(
-        spark, paths, qv, space, score_name, filter_ids=filter_ids,
-        deny=_deny_info(index_dir),
-    ).filter(F.col(score_name) >= t)
-    w = Window.orderBy(F.desc(score_name), F.asc("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).select(
-        "vec_id", F.round(score_name, 6).alias(score_name), "rank"
-    )
-
-
-def _exact_scores(
-    spark, paths, qv, space, score_name, extra_filter=None,
-    filter_ids=None, deny=None,
-) -> DataFrame:
-    q = F.array(*[F.lit(float(x)) for x in qv])
-    qn = F.lit(float(np.linalg.norm(qv)))
-    df = spark.read.schema(
-        "vec_id long, v array<double>, norm double"
-    ).parquet(*paths)
-    if extra_filter is not None:
-        df = df.filter(extra_filter)
-    df = _apply_deny(_apply_allow(df, filter_ids), deny)
-    if space == "cosine":
-        score = _dot(F.col("v"), q) / (F.col("norm") * qn)
-    else:
-        score = space_score_col(F.col("v"), q, space, vnorm=F.col("norm"))
-    return df.select("vec_id", score.alias(score_name))
+    return _single(_ivf_search(
+        spark, index_dir, ["q"], np.asarray([query_vec], dtype=np.float64),
+        0, n_probe=n_probe, space=space, quantizer=None, overquery=None,
+        metrics=None, filter_ids=filter_ids,
+        filtered_exact_threshold=filtered_exact_threshold,
+        approximate_threshold=approximate_threshold, min_score=t,
+    ))
 
 
 def _pq_bytes_metrics(
@@ -1840,32 +1875,42 @@ def _pq_bytes_metrics(
 
 def _np_exact_batch(
     M: np.ndarray, norms: np.ndarray, Qs: np.ndarray, qnorms: np.ndarray,
-    space: str,
+    space: str, pairs: tuple | None = None,
 ) -> np.ndarray:
-    """(b, nq) exact scores of a cell batch against its query subset —
-    ONE matmul (or one diff tensor for l1/linf) for ALL of the cell's
-    queries, replacing round-3's per-query python loop."""
+    """Exact scores of rows ``M`` against queries ``Qs``: the dense
+    (b, nq) matrix, or with ``pairs=(rows, queries)`` only those
+    entries. The one numpy exact scorer of every Spark ANN path.
+
+    Dot products go through einsum, not BLAS: a BLAS gemm/gemv blocks
+    rows and can give IDENTICAL rows bitwise-different scores, which
+    breaks the (score desc, vec_id asc) tie order on duplicated
+    vectors. einsum sums each entry the same way in every shape, so
+    dense, paired and single-query (``LocalIvfSearcher._score_cell``)
+    scores agree bitwise."""
+    if pairs is None:
+        A, B = M[:, None, :], Qs[None, :, :]
+        an, bn = norms[:, None], qnorms[None, :]
+    else:
+        r, c = pairs
+        A, B, an, bn = M[r], Qs[c], norms[r], qnorms[c]
     if space == "cosine":
-        return (M @ Qs.T) / (
-            np.where(norms == 0, 1.0, norms)[:, None]
-            * np.where(qnorms == 0, 1.0, qnorms)[None, :]
+        return np.einsum("...j,...j->...", A, B) / (
+            np.where(an == 0, 1.0, an) * np.where(bn == 0, 1.0, bn)
         )
     if space == "l2":
         d2 = (
-            (M * M).sum(axis=1)[:, None]
-            - 2.0 * (M @ Qs.T)
-            + (Qs * Qs).sum(axis=1)[None, :]
+            (A * A).sum(axis=-1)
+            - 2.0 * np.einsum("...j,...j->...", A, B)
+            + (B * B).sum(axis=-1)
         )
         return 1.0 / (1.0 + np.maximum(d2, 0.0))
     if space == "innerproduct":
-        ip = M @ Qs.T
+        ip = np.einsum("...j,...j->...", A, B)
         return np.where(ip >= 0, ip + 1.0, 1.0 / (1.0 - ip))
     if space == "l1":
-        d1 = np.abs(M[:, None, :] - Qs[None, :, :]).sum(axis=2)
-        return 1.0 / (1.0 + d1)
+        return 1.0 / (1.0 + np.abs(A - B).sum(axis=-1))
     if space == "linf":
-        dm = np.abs(M[:, None, :] - Qs[None, :, :]).max(axis=2)
-        return 1.0 / (1.0 + dm)
+        return 1.0 / (1.0 + np.abs(A - B).max(axis=-1))
     raise ValueError(f"unknown space {space!r}; supported: {SPACES}")
 
 
@@ -1884,321 +1929,30 @@ def ivf_query_batch(
     filtered_exact_threshold: int = FILTERED_EXACT_THRESHOLD,
     approximate_threshold: int | None = None,
 ) -> DataFrame:
-    """(query_id, vec_id, cos|score, rank) for a BATCH of query vectors
-    in ONE pruned scan (the bm25_topk_batch analog — round 2 ran one
-    job per query vector). The driver probes the centroid table for
-    every query, unions the probed cell directories, ships a broadcast
-    (query matrix, per-cell query lists), and each Arrow batch scores
-    ONLY the queries that probed its cell — one matmul per cell group
+    """(query_id, vec_id, cos|score, rank) for a BATCH of
+    (query_id, vector) pairs in ONE pruned scan (the bm25_topk_batch
+    analog). The driver probes the centroid table for every query,
+    unions the probed cell directories, and each Arrow batch scores
+    ONLY the queries that probed its cell — one kernel per cell group
     for ALL of that cell's queries.
 
-    With ``use_pq`` / ``use_sq`` the batch gets the same compression
-    economics as single-query ``ivf_query`` (round-3 verdict: the batch
-    path read full vectors, evaporating the PQ win exactly where it
-    pays most): pass 1 reads ONLY code columns of the probed cells, one
-    ADC gather / int8 matmul per cell group scores all of its queries,
-    each query keeps its best ``k * overquery`` candidates, and ONE
-    second read reranks the union of candidates against full vectors
-    (vec_id pushdown). Per-query results stay rank-identical to
-    ``ivf_query`` (same probe rule, same proxy, same budget).
-    ``metrics`` receives the batch bytes-scanned accounting;
-    ``filter_ids`` masks candidates before any budget (Q4); a small
-    allow-list takes the exact fallback for EVERY query in the batch
-    (one pushdown read, one kernel — KNNSettings.java:87 analog)."""
-    qids = [q[0] for q in queries]
-    Q = np.array([np.asarray(q[1], dtype=np.float64) for q in queries])
-    small = _allow_ids_if_small(filter_ids, filtered_exact_threshold)
-    if small is not None:
-        return _filtered_exact_batch(spark, index_dir, qids, Q, small,
-                                     k, space)
-    th_approx = (
-        APPROXIMATE_THRESHOLD
-        if approximate_threshold is None
-        else approximate_threshold
-    )
-    if _index_smaller_than(index_dir, th_approx) is not None:
-        # small-index exact bypass (approximate_threshold,
-        # KNNSettings.java:70): one full scan, one kernel scoring every
-        # query — bounded by the threshold, perfectly correct
-        return _filtered_exact_batch(
-            spark, index_dir, qids, Q, None, k, space,
-            filter_ids=filter_ids,
-        )
-    probes = {
-        qid: _probe_cells(index_dir, Q[i], n_probe, space)
-        for i, qid in enumerate(qids)
-    }
-    all_cells = sorted({c for ps in probes.values() for c in ps})
-    paths = _cell_paths(index_dir, all_cells)
-    deny = _deny_info(index_dir)  # tombstoned ids never match (liveDocs)
-    score_name = "cos" if space == "cosine" else "score"
-    out_schema = f"query_id string, vec_id long, {score_name} double"
-    if not paths:
-        return spark.createDataFrame([], out_schema + ", rank int")
-    if use_pq and use_sq:
-        raise ValueError("choose one of use_pq / use_sq")
-    if (use_pq or use_sq) and space not in QUANTIZABLE_SPACES:
-        raise ValueError(
-            f"quantized pass supports {QUANTIZABLE_SPACES}, got {space!r}"
-        )
-    cell_to_q: dict[int, list[int]] = {}
-    for i, qid in enumerate(qids):
-        for c in probes[qid]:
-            cell_to_q.setdefault(c, []).append(i)
-    base = os.path.join(index_dir, "cells")
-    qnorms = np.linalg.norm(Q, axis=1)
-
-    if not (use_pq or use_sq):
-        bc = spark.sparkContext.broadcast(
-            {"Q": Q, "qids": qids, "cell_to_q": cell_to_q, "qn": qnorms}
-        )
-
-        def kernel(batches):
-            from ..functions.runtime import limit_worker_threads
-
-            limit_worker_threads()
-            state = bc.value
-            Qm, ids, c2q = state["Q"], state["qids"], state["cell_to_q"]
-            qn = state["qn"]
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                out = {"query_id": [], "vec_id": [], score_name: []}
-                for cell, grp in pdf.groupby("cell"):
-                    idxs = c2q.get(int(cell), [])
-                    if not idxs:
-                        continue
-                    M = _stack_batch(grp["v"], Qm.shape[1])
-                    vids = grp["vec_id"].to_numpy()
-                    norms = grp["norm"].to_numpy(dtype=np.float64)
-                    S = _np_exact_batch(
-                        M, norms, Qm[idxs], qn[idxs], space
-                    )
-                    for j, qi in enumerate(idxs):
-                        out["query_id"].extend([ids[qi]] * len(vids))
-                        out["vec_id"].extend(vids)
-                        out[score_name].extend(S[:, j])
-                yield pd.DataFrame(out)
-
-        scan = (
-            spark.read.schema(
-                "vec_id long, v array<double>, norm double, cell int"
-            )
-            .option("basePath", base)
-            .parquet(*paths)
-        )
-        scored = _apply_deny(
-            _apply_allow(scan, filter_ids), deny
-        ).mapInPandas(kernel, schema=out_schema)
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc(score_name), F.asc("vec_id")
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id", "vec_id",
-                F.round(score_name, 6).alias(score_name), "rank",
-            )
-        )
-
-    # ---- quantized batch: ADC/SQ first pass over codes only ----
-    if use_pq:
-        from .quantize import adc_table, load_codebooks
-
-        codebooks = load_codebooks(index_dir)
-        if codebooks is None:
-            raise ValueError(f"index at {index_dir} was built without pq_m")
-        # (nq, m, n_codes) ADC tables — one per query, built driver-side
-        T_all = np.stack([adc_table(Q[i], codebooks) for i in range(len(Q))])
-        pass1_schema = "vec_id long, norm double, code binary, cell int"
-        approx_cols = ("code", "norm")
-    else:
-        T_all = None
-        pass1_schema = (
-            "vec_id long, norm double, sq_code binary, sq_scale double, "
-            "cell int"
-        )
-        approx_cols = ("sq_code", "sq_scale", "norm")
-
-    budget = rescore_first_pass_k(k, Q.shape[1], overquery)
-    bc1 = spark.sparkContext.broadcast({
-        "Q": Q, "qids": qids, "cell_to_q": cell_to_q, "qn": qnorms,
-        "T": T_all, "budget": budget,
-    })
-
-    def approx_kernel(batches):
-        from ..functions.runtime import limit_worker_threads
-
-        limit_worker_threads()
-        from .quantize import sq_scores
-
-        state = bc1.value
-        Qm, ids, c2q = state["Q"], state["qids"], state["cell_to_q"]
-        qn, T, budget = state["qn"], state["T"], state["budget"]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = {"query_id": [], "vec_id": [], "a": []}
-            for cell, grp in pdf.groupby("cell"):
-                idxs = c2q.get(int(cell), [])
-                if not idxs:
-                    continue
-                vids = grp["vec_id"].to_numpy()
-                norms = grp["norm"].to_numpy(dtype=np.float64)
-                if T is not None:  # PQ: one flat gather per cell group
-                    m, ncodes = T.shape[1], T.shape[2]
-                    Cb = np.frombuffer(
-                        b"".join(grp["code"].to_numpy()), dtype=np.uint8
-                    ).reshape(len(vids), m)
-                    flat_idx = (np.arange(m) * ncodes + Cb).ravel()
-                    lut = T[idxs].reshape(len(idxs), m * ncodes)
-                    dots = lut[:, flat_idx].reshape(
-                        len(idxs), len(vids), m
-                    ).sum(axis=2)  # (nq_c, b)
-                else:  # SQ: one int8->f64 matmul for all queries
-                    Cb = np.frombuffer(
-                        b"".join(grp["sq_code"].to_numpy()), dtype=np.int8
-                    ).reshape(len(vids), Qm.shape[1])
-                    scales = grp["sq_scale"].to_numpy(dtype=np.float64)
-                    dots = (
-                        (Cb.astype(np.float64) @ Qm[idxs].T) * scales[:, None]
-                    ).T  # (nq_c, b)
-                for j, qi in enumerate(idxs):
-                    a = _proxy_from_dots(dots[j], norms, qn[qi], space)
-                    # partial top-k per query per batch bounds the
-                    # shuffle: global budget is a subset of these
-                    if len(a) > budget:
-                        part = np.argpartition(-a, budget)[:budget]
-                    else:
-                        part = np.arange(len(a))
-                    out["query_id"].extend([ids[qi]] * len(part))
-                    out["vec_id"].extend(vids[part])
-                    out["a"].extend(a[part])
-            yield pd.DataFrame(out)
-
-    scan1 = (
-        spark.read.schema(pass1_schema).option("basePath", base)
-        .parquet(*paths)
-    )
-    approx = _apply_deny(_apply_allow(scan1, filter_ids), deny).mapInPandas(
-        approx_kernel, schema="query_id string, vec_id long, a double"
-    )
-    w1 = Window.partitionBy("query_id").orderBy(F.desc("a"), F.asc("vec_id"))
-    cand_rows = (
-        approx.withColumn("r", F.row_number().over(w1))
-        .filter(F.col("r") <= budget)
-        .select("query_id", "vec_id")
-        .collect()
-    )
-    if metrics is not None:
-        union_ids = {r["vec_id"] for r in cand_rows}
-        metrics.update(
-            _pq_bytes_metrics(paths, len(union_ids), approx_cols)
-        )
-        metrics["n_queries"] = len(qids)
-        # the batch reads the code columns ONCE for all queries and
-        # reranks the (overlapping) candidate union once — the fair
-        # comparison with single-query cost is per-query AMORTIZED
-        # bytes: N single queries each pay the full approx pass
-        metrics["amortized_bytes_per_query"] = int(
-            metrics["bytes_scanned"] / max(1, len(qids))
-        )
-        metrics["amortized_compression_ratio"] = round(
-            metrics["unquantized_bytes"]
-            / max(1, metrics["amortized_bytes_per_query"]),
-            2,
-        )
-    if not cand_rows:
-        return spark.createDataFrame([], out_schema + ", rank int")
-
-    # pass 2: ONE exact read of the candidate union (vec_id pushdown),
-    # each vector scored only for the queries that shortlisted it.
-    # The (vec_id -> query list) map ships as CSR arrays so the kernel
-    # emits rows with a fully VECTORIZED gather — round 4 looped
-    # per-row python here (bounded by budget x queries, but a loop in
-    # the rerank hot path all the same).
-    vid_to_q: dict[int, list[int]] = {}
-    qpos = {qid: i for i, qid in enumerate(qids)}
-    for r in cand_rows:
-        vid_to_q.setdefault(r["vec_id"], []).append(qpos[r["query_id"]])
-    uvids = np.array(sorted(vid_to_q), dtype=np.int64)
-    csr_cnt = np.array([len(vid_to_q[v]) for v in uvids], dtype=np.int64)
-    indptr = np.concatenate(([0], np.cumsum(csr_cnt)))
-    qidx = (
-        np.concatenate(
-            [np.asarray(vid_to_q[v], dtype=np.int64) for v in uvids]
-        )
-        if len(uvids)
-        else np.empty(0, np.int64)
-    )
-    bc2 = spark.sparkContext.broadcast(
-        {
-            "Q": Q, "qids": np.asarray(qids, dtype=object), "qn": qnorms,
-            "uvids": uvids, "indptr": indptr, "qidx": qidx,
-        }
-    )
-
-    def rerank_kernel(batches):
-        from ..functions.runtime import limit_worker_threads
-
-        limit_worker_threads()
-        state = bc2.value
-        Qm, ids, qn = state["Q"], state["qids"], state["qn"]
-        uv, ptr, qix = state["uvids"], state["indptr"], state["qidx"]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = _stack_batch(pdf["v"], Qm.shape[1])
-            vids = pdf["vec_id"].to_numpy()
-            norms = pdf["norm"].to_numpy(dtype=np.float64)
-            S = _np_exact_batch(M, norms, Qm, qn, space)  # (b, nq)
-            # every scanned vid is in the union (the scan is pushdown/
-            # semi-join filtered on exactly these ids)
-            pos = np.searchsorted(uv, vids)
-            cnt = ptr[pos + 1] - ptr[pos]
-            nsel = int(cnt.sum())
-            if nsel == 0:
-                continue
-            row_rep = np.repeat(np.arange(len(vids)), cnt)
-            base = np.repeat(np.cumsum(cnt) - cnt, cnt)
-            intra = np.arange(nsel, dtype=np.int64) - base
-            flat = qix[np.repeat(ptr[pos], cnt) + intra]
-            yield pd.DataFrame(
-                {
-                    "query_id": ids[flat],
-                    "vec_id": vids[row_rep],
-                    score_name: S[row_rep, flat],
-                }
-            )
-
-    union = sorted(vid_to_q)
-    scan2 = spark.read.schema(
-        "vec_id long, v array<double>, norm double"
-    ).parquet(*paths)
-    if len(union) <= 1024:
-        # small union: an In() literal reaches the parquet scan as a
-        # pushed filter (row-group pruning)
-        scan2 = scan2.filter(F.col("vec_id").isin(union))
-    else:
-        # large union: a 10k-literal In() bloats the plan and prunes
-        # nothing (ids are scattered across row groups anyway) — a
-        # broadcast semi-join filters JVM-side at scan speed
-        ids_df = spark.createDataFrame(
-            [(int(i),) for i in union], "vec_id long"
-        )
-        scan2 = scan2.join(F.broadcast(ids_df), "vec_id", "left_semi")
-    scored = scan2.mapInPandas(rerank_kernel, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(score_name), F.asc("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "vec_id",
-            F.round(score_name, 6).alias(score_name), "rank",
-        )
+    With ``use_pq`` / ``use_sq`` pass 1 reads ONLY code columns of the
+    probed cells, each query keeps its best ``k * overquery``
+    candidates, and ONE second read reranks the union of candidates
+    against full vectors (vec_id pushdown). Per-query results are
+    identical to ``ivf_query`` (the same engine: same probe rule,
+    proxy, budget, tie-safe cut and exact kernel). ``metrics``
+    receives the batch bytes-scanned accounting; ``filter_ids`` and
+    both exact-search thresholds act as in ``ivf_query``, for every
+    query of the batch."""
+    return _ivf_search(
+        spark, index_dir, [q[0] for q in queries],
+        np.array([np.asarray(q[1], dtype=np.float64) for q in queries]),
+        k, n_probe=n_probe, space=space,
+        quantizer=_resolve_quantizer(index_dir, space, use_pq, use_sq),
+        overquery=overquery, metrics=metrics, filter_ids=filter_ids,
+        filtered_exact_threshold=filtered_exact_threshold,
+        approximate_threshold=approximate_threshold,
     )
 
 
@@ -2378,14 +2132,13 @@ class LocalIvfSearcher:
         norms: np.ndarray,
         aux: dict,
         qv: np.ndarray,
-        Qs_T: np.ndarray,
         qn_guard: float,
         qsq: float,
     ) -> np.ndarray:
         """Exact scores for one cell — identical values AND identical
         operation order to ``_np_exact_batch`` with a single query (the
-        distributed path), so local and cluster answers stay bitwise
-        equal. ``aux`` caches per-cell query-independent terms (guarded
+        distributed path, einsum dots included), so local and cluster
+        answers stay bitwise equal. ``aux`` caches per-cell query-independent terms (guarded
         norms, |m|^2) across calls; it is keyed to the cell's live view
         and cleared whenever the tombstone mask or an allow-list
         changes the row set."""
@@ -2395,16 +2148,16 @@ class LocalIvfSearcher:
             if ng is None:
                 ng = np.where(norms == 0, 1.0, norms)
                 aux["ng"] = ng
-            return (M @ Qs_T)[:, 0] / (ng * qn_guard)
+            return np.einsum("ij,j->i", M, qv) / (ng * qn_guard)
         if space == "l2":
             msq = aux.get("msq")
             if msq is None:
                 msq = (M * M).sum(axis=1)
                 aux["msq"] = msq
-            d2 = msq - 2.0 * (M @ Qs_T)[:, 0] + qsq
+            d2 = msq - 2.0 * np.einsum("ij,j->i", M, qv) + qsq
             return 1.0 / (1.0 + np.maximum(d2, 0.0))
         if space == "innerproduct":
-            ip = (M @ Qs_T)[:, 0]
+            ip = np.einsum("ij,j->i", M, qv)
             return np.where(ip >= 0, ip + 1.0, 1.0 / (1.0 - ip))
         if space == "l1":
             d1 = np.abs(M - qv[None, :]).sum(axis=1)
@@ -2450,10 +2203,9 @@ class LocalIvfSearcher:
                 f"probed cells hold {tot} vector bytes > max_bytes="
                 f"{self.max_bytes}; use the distributed ivf_query"
             )
-        qn = float(np.sqrt(qv @ qv))
-        Qs_T = np.ascontiguousarray(qv[:, None])  # (d, 1) gemm shape
-        qn_guard = qn if qn != 0 else 1.0
         qsq = float((qv * qv).sum())
+        qn = float(np.sqrt(qsq))  # == np.linalg.norm(Q, axis=1) bitwise
+        qn_guard = qn if qn != 0 else 1.0
         cand_ids, cand_s = [], []
         for ids, M, norms, aux in loaded:
             if allow is not None:
@@ -2464,7 +2216,7 @@ class LocalIvfSearcher:
                 aux = {}  # per-space caches index the full cell
             if not len(ids):
                 continue
-            s = self._score_cell(M, norms, aux, qv, Qs_T, qn_guard, qsq)
+            s = self._score_cell(M, norms, aux, qv, qn_guard, qsq)
             if min_score is not None:
                 keep = s >= min_score
                 ids, s = ids[keep], s[keep]
@@ -2523,32 +2275,19 @@ def ivf_query_local(
         searcher = LocalIvfSearcher(index_dir, space, max_bytes)
         _LOCAL_SEARCHERS[key] = searcher
     qv = np.asarray(query_vec, dtype=np.float64)
-    allow = None
-    probe = None
+    allow = probe = None
     if filter_ids is not None:
         allow = np.fromiter((int(x) for x in filter_ids), dtype=np.int64)
-        if 0 < len(allow) <= filtered_exact_threshold:
-            # small-filter exact fallback (KNNSettings.java:87): scan
-            # EVERY cell so no allowed id can hide in an unprobed one —
-            # still bounded by max_bytes, and perfectly correct
-            _recover_cell_swaps(os.path.join(index_dir, "cells"))
-            cells_all, _ = _load_centroids(index_dir)
-            probe = sorted(int(c) for c in cells_all)
-    if probe is None:
-        # small-INDEX exact bypass (approximate_threshold,
-        # KNNSettings.java:70): below the size threshold probing is
-        # pointless — scan every cell, still bounded by max_bytes.
-        # The memoized early-exit footer count keeps the warm-path
-        # decision to one scandir (~us), preserving the ms/op budget.
-        th_approx = (
-            APPROXIMATE_THRESHOLD
-            if approximate_threshold is None
-            else approximate_threshold
-        )
-        if _index_smaller_than(index_dir, th_approx) is not None:
-            _recover_cell_swaps(os.path.join(index_dir, "cells"))
-            cells_all, _ = _load_centroids(index_dir)
-            probe = sorted(int(c) for c in cells_all)
+    # the small-filter exact fallback (KNNSettings.java:87) and the
+    # small-INDEX bypass (approximate_threshold, KNNSettings.java:70)
+    # scan EVERY cell, still bounded by max_bytes. The memoized
+    # early-exit footer count keeps the warm-path decision to one
+    # scandir (~us), preserving the ms/op budget.
+    if (
+        allow is not None and 0 < len(allow) <= filtered_exact_threshold
+    ) or _index_smaller_than(index_dir, approximate_threshold) is not None:
+        _recover_cell_swaps(os.path.join(index_dir, "cells"))
+        probe = sorted(int(c) for c in _load_centroids(index_dir)[0])
     ids, s = searcher.query(
         qv, k, n_probe, min_score=min_score, allow=allow, probe=probe
     )
@@ -2683,16 +2422,23 @@ def ivf_append(
 
     n = e.count()  # id-column count (pushed down), not a lists recompute
     if batch_tag is not None:
-        return _ivf_append_tagged(
+        out = _ivf_append_tagged(
             lists, cells_dir, index_dir, n, batch_tag, legacy_tags
         )
-    (
-        lists.repartition("cell")
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(cells_dir)
-    )
-    return {"appended": int(n)}
+    else:
+        (
+            lists.repartition("cell")
+            .write.mode("append")
+            .partitionBy("cell")
+            .parquet(cells_dir)
+        )
+        out = {"appended": int(n)}
+    # files landing inside existing cells leave the cells/ signature of
+    # the small-index memo unchanged: drop the memo, and touch the
+    # directory so other processes' memos miss too
+    _APPROX_COUNT_CACHE.pop(index_dir, None)
+    os.utime(cells_dir)
+    return out
 
 
 def _ivf_append_tagged(
@@ -3018,7 +2764,8 @@ def cosine_topk_ivf(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    index_dir: str | None = None,
+    *,
+    index_dir: str,
     kmeans_iters: int = 1,
     space: str = "cosine",
     use_pq: bool = False,
@@ -3036,48 +2783,22 @@ def cosine_topk_ivf(
     coarse: bool | int = False,
     approximate_threshold: int | None = None,
 ) -> DataFrame:
-    """IVF top-k. With ``index_dir`` (the production path) the
-    persisted index is built once if missing and every query just
-    probes it. Default ``kmeans_iters=1``: the shipped path uses
-    refined centroids (round 2 shipped data-order seed centroids and
-    only tested k-means separately). Without ``index_dir``, a
-    transient one-shot assignment runs in-line — ONLY for ad-hoc
-    exploration; never per-query at scale."""
-    spark = embeddings.sparkSession
-    if index_dir is not None:
-        if not os.path.isdir(os.path.join(index_dir, "centroids")):
-            ivf_build(
-                embeddings, index_dir, n_centroids,
-                kmeans_iters=kmeans_iters, id_col=id_col, vec_col=vec_col,
-                space=space, pq_m=pq_m, sq=sq, bq=bq, msq_bits=msq_bits,
-                coarse=coarse,
-            )
-        return ivf_query(
-            spark, index_dir, query_vec, k, n_probe, space,
-            use_pq=use_pq, use_sq=use_sq, use_bq=use_bq, use_msq=use_msq,
-            overquery=overquery, metrics=metrics, filter_ids=filter_ids,
-            filtered_exact_threshold=filtered_exact_threshold,
-            approximate_threshold=approximate_threshold,
+    """IVF top-k over the persisted index at ``index_dir``: built once
+    from ``embeddings`` if missing, then every call just probes it.
+    Default ``kmeans_iters=1``: the shipped path uses refined centroids
+    (round 2 shipped data-order seed centroids and only tested k-means
+    separately)."""
+    if not os.path.isdir(os.path.join(index_dir, "centroids")):
+        ivf_build(
+            embeddings, index_dir, n_centroids,
+            kmeans_iters=kmeans_iters, id_col=id_col, vec_col=vec_col,
+            space=space, pq_m=pq_m, sq=sq, bq=bq, msq_bits=msq_bits,
+            coarse=coarse,
         )
-
-    e = embeddings.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
+    return ivf_query(
+        embeddings.sparkSession, index_dir, query_vec, k, n_probe, space,
+        use_pq=use_pq, use_sq=use_sq, use_bq=use_bq, use_msq=use_msq,
+        overquery=overquery, metrics=metrics, filter_ids=filter_ids,
+        filtered_exact_threshold=filtered_exact_threshold,
+        approximate_threshold=approximate_threshold,
     )
-    C = _seed_centroids(e, n_centroids)
-    if kmeans_iters:
-        C = _kmeans_refine(e, C, kmeans_iters, space)
-    qv = np.asarray(query_vec, dtype=np.float64)
-    sims = _np_space_scores(qv[None, :], C, space)[0]
-    probe = sorted(
-        int(i) for i in np.lexsort((np.arange(len(C)), -sims))[:n_probe]
-    )
-    assign = ivf_assign(e, C, n_centroids, "vec_id", "v", space)
-    cand = assign.filter(F.col("cell").isin(probe)).select("vec_id")
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    score_name = "cos" if space == "cosine" else "score"
-    scored = _apply_allow(
-        e.join(cand, "vec_id", "left_semi"), filter_ids
-    ).select(
-        "vec_id", space_score_col(F.col("v"), q, space).alias(score_name)
-    )
-    return _rank_topk(scored, k, score_name)

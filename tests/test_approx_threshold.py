@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from opensearch_jvector_spark.operators.similarity import (
     _index_smaller_than,
     _APPROX_COUNT_CACHE,
+    ivf_append,
     ivf_build,
     ivf_delete,
     ivf_query,
@@ -166,3 +167,32 @@ def test_bypass_still_masks_tombstones(spark, idx, tmp_path):
                           approximate_threshold=15_000))
     assert victim not in {v for v, _, _ in got}
     assert len(got) == 10  # k refilled from the exact whole-index scan
+
+
+def test_append_past_threshold_ends_bypass(spark, idx, tmp_path):
+    """Appended files land inside existing cell directories, which
+    leaves the cells/ signature of the memoized row count unchanged:
+    ivf_append must drop the memo (and touch cells/ for other
+    processes), or the grown index keeps its small-index bypass."""
+    import os
+    import shutil
+
+    d = str(tmp_path / "idx_append")
+    shutil.copytree(idx, d)
+    q = _qvec(spark)
+    metrics: dict = {}
+    ivf_query(spark, d, q, k=5, n_probe=1, approximate_threshold=N_ROWS,
+              metrics=metrics).collect()
+    assert metrics.get("approximate_bypassed") is True
+    cells = os.path.join(d, "cells")
+    before = os.stat(cells).st_mtime_ns
+    grow = _emb(spark).filter(F.col("vec_id") < 50).withColumn(
+        "vec_id", F.col("vec_id") + 10_000
+    )
+    ivf_append(spark, d, grow, batch_tag="grow")
+    assert os.stat(cells).st_mtime_ns != before
+    metrics = {}
+    got = ivf_query(spark, d, q, k=5, n_probe=1,
+                    approximate_threshold=N_ROWS, metrics=metrics).collect()
+    assert "approximate_bypassed" not in metrics
+    assert len(got) == 5

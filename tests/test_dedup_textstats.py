@@ -179,7 +179,7 @@ def test_quality_score_ranges(docs):
         assert r.n_tokens > 0
 
 
-def test_ivf_recall_vs_bruteforce(spark):
+def test_ivf_recall_vs_bruteforce(spark, tmp_path):
     from opensearch_jvector_spark.operators.similarity import (
         cosine_topk_bruteforce,
         cosine_topk_ivf,
@@ -188,15 +188,20 @@ def test_ivf_recall_vs_bruteforce(spark):
     embs = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     q = [float(x) for x in embs.filter(F.col("vec_id") == 7).first()["embedding"]]
     exact = [r.vec_id for r in cosine_topk_bruteforce(embs, q, 10).collect()]
+    index_dir = str(tmp_path / "ivf")  # built by the first call
     approx = [
         r.vec_id
-        for r in cosine_topk_ivf(embs, q, 10, n_centroids=8, n_probe=8).collect()
+        for r in cosine_topk_ivf(
+            embs, q, 10, n_centroids=8, n_probe=8, index_dir=index_dir
+        ).collect()
     ]
     # probing ALL cells must equal brute force (rank-identical)
     assert approx == exact
     some = [
         r.vec_id
-        for r in cosine_topk_ivf(embs, q, 10, n_centroids=8, n_probe=3).collect()
+        for r in cosine_topk_ivf(
+            embs, q, 10, n_centroids=8, n_probe=3, index_dir=index_dir
+        ).collect()
     ]
     # pruned probe: results are a subset of the corpus ranked exactly;
     # recall floor mirrors the reference's recall suite (>= 0.5 of 10)
