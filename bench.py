@@ -15,8 +15,10 @@ corpus sized by the scale factor of $SPARK_GRAFT_SF_DIR:
     >= SCALING_MIN_TURNS so kernel compute dominates fixed driver
     costs, and tmpfs (/dev/shm) for index + shuffle dirs so ext4
     writeback noise does not alias into the core-count comparison.
-    Each size runs 1 warmup + SCALING_TRIALS timed builds; min is
-    reported (shared-JVM GC makes single trials bimodal).
+    Trials interleave the two sizes (lo, hi, lo, hi, ...) for
+    SCALING_TRIALS rounds, one fresh process with 1 untimed warmup per
+    trial; the min per size is reported (shared-JVM GC makes single
+    trials bimodal).
 
 The engine CONFIG is identical at every parallelism level — the north
 rule compares the same job at two cluster sizes, so the index layout
@@ -440,58 +442,6 @@ def _kernel_scaling(lo: int, hi: int, n_docs: int = 16384) -> dict:
 
 
 def _run_scaling_pair(lo: int, hi: int, n_convs: int) -> dict:
-    """Same job + config + input at lo and hi cores, each in a FRESH
-    process (a second SparkContext in one JVM degrades 2-5x)."""
-    import subprocess
-
-    scratch = _scaling_scratch()
-    out = {}
-    try:
-        for cores in (lo, hi):
-            env = dict(
-                os.environ,
-                BENCH_WORKER_CORES=str(cores),
-                BENCH_WORKER_CONVS=str(n_convs),
-                BENCH_WORKER_SCRATCH=scratch,
-            )
-            proc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__)],
-                env=env, capture_output=True, text=True, timeout=3000,
-            )
-            if proc.returncode != 0:
-                raise RuntimeError(
-                    f"scaling worker ({cores} cores) failed:\n"
-                    + proc.stderr[-2000:]
-                )
-            payload = json.loads(proc.stdout.strip().splitlines()[-1])
-            times = payload["times"]
-            out[cores] = {
-                "turns_per_sec": payload["n_turns"] / min(times),
-                "trials_sec": [round(t, 2) for t in times],
-                "stages": payload.get("stages", {}),
-            }
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    eff = out[hi]["turns_per_sec"] / (out[lo]["turns_per_sec"] * (hi / lo))
-    return {
-        "n_turns": n_convs * TURNS_PER_CONV,
-        # external (host-level) load when the pair ran: this sandbox
-        # shares hardware — os.getloadavg() counts OTHER tenants' work,
-        # which contends directly with the hi-core measurement
-        "host_loadavg": round(os.getloadavg()[0], 1),
-        "cores_lo": lo,
-        "cores_hi": hi,
-        f"turns_per_sec_local[{lo}]": round(out[lo]["turns_per_sec"], 1),
-        f"turns_per_sec_local[{hi}]": round(out[hi]["turns_per_sec"], 1),
-        f"trials_local[{lo}]": out[lo]["trials_sec"],
-        f"trials_local[{hi}]": out[hi]["trials_sec"],
-        f"stages_local[{lo}]": out[lo]["stages"],
-        f"stages_local[{hi}]": out[hi]["stages"],
-        "efficiency": round(eff, 3),
-    }
-
-
-def _run_scaling_pair_interleaved(lo: int, hi: int, n_convs: int) -> dict:
     """INTERLEAVED trials (lo, hi, lo, hi, ...), one fresh process per
     trial, each with its own untimed warmup build. On a multi-tenant
     host a contention burst that lands inside one LEG of the
@@ -646,14 +596,9 @@ def main() -> None:
         pairs = [(lo_cores, CPUS, sc_turns)]
         if lo_cores > 2:
             pairs.append((2, 8, max(400_000, sc_turns // 3)))
-        runner = (
-            _run_scaling_pair_interleaved
-            if os.environ.get("BENCH_SCALING_INTERLEAVED") == "1"
-            else _run_scaling_pair
-        )
         result["scaling"] = {"pairs": []}
         for lo, hi, turns in pairs:
-            pair = runner(lo, hi, turns // TURNS_PER_CONV)
+            pair = _run_scaling_pair(lo, hi, turns // TURNS_PER_CONV)
             pair.update(_kernel_scaling(lo, hi))
             result["scaling"]["pairs"].append(pair)
         # headline = the primary (CPUS/4 -> CPUS) pair
@@ -691,8 +636,9 @@ def _write_baseline_md(result: dict, lo_cores: int) -> None:
                 f"(trials {p[f'trials_local[{hi}]']}) |\n"
                 f"| **scaling efficiency {lo} -> {hi} cores** | "
                 f"**{p['efficiency']}** |\n"
-                f"| host load average during pair (external tenants) | "
-                f"{p.get('host_loadavg', 'n/a')} |\n"
+                f"| launch load averages local[{lo}] / local[{hi}] "
+                f"(external tenants) | {p[f'launch_loads_local[{lo}]']} / "
+                f"{p[f'launch_loads_local[{hi}]']} |\n"
                 f"| kernel-only efficiency ({lo}p -> {hi}p, "
                 f"multiprocessing) | {p['kernel_efficiency']} |\n"
                 f"| stages @ local[{lo}] (best trial) | "
@@ -702,9 +648,9 @@ def _write_baseline_md(result: dict, lo_cores: int) -> None:
             )
         f.write(
             "\nProtocol: identical engine config + input at both sizes of "
-            "each pair; every size runs in a fresh process with 1 untimed "
-            "warmup + best-of-"
-            f"{SCALING_TRIALS} timed builds (the reference's own JMH "
+            "each pair; trials interleave the sizes (lo, hi, lo, hi, ...), "
+            "each in a fresh process with 1 untimed warmup build, best-of-"
+            f"{SCALING_TRIALS} timed trials per size (the reference's own JMH "
             "benchmarks likewise discard warmup iterations); index + "
             "shuffle scratch on tmpfs so ext4 writeback noise does not "
             "alias into the core-count comparison. Scaling efficiency = "

@@ -208,6 +208,17 @@ def _merge_batch(pdf: pd.DataFrame, cap: int) -> pd.DataFrame:
     fb1 = gbe[fast]
     d_lo = g_doc_off[fb0]
     t_lo = g_tf_off[fb0]
+    # the rebase below is only right if each group's first block starts
+    # at its first row's first byte (blocks tile rows from offset 0)
+    has = fb1 > fb0
+    if not (
+        np.array_equal(d_lo[has], doc_row_off[f_starts][has])
+        and np.array_equal(t_lo[has], tf_row_off[f_starts][has])
+    ):
+        raise AssertionError(
+            "merge fast path: a group's first block does not start at its "
+            "first row's byte 0 (block tiling invariant broken)"
+        )
     counts32 = counts.astype(np.int32)
     out = pd.DataFrame(
         {

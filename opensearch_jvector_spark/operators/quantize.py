@@ -1,37 +1,34 @@
-"""Product quantization (PQ) for the embedding ANN index.
+"""First-pass quantizers for the embedding ANN index: kernels, persisted
+trained state, and ``QUANTIZERS``, the registry with one entry each:
 
-The reference's defining mechanism: vectors are compressed into M
-per-subspace codebook indices at index-build time and searches score
-the COMPRESSED codes first, then rerank the best candidates against
-the full-precision vectors (JVectorWriter.getPQVectors,
-JVectorWriter.java:381-414; subspace sizing JVectorFormat.java:147-178;
-the rerank path JVectorReader.java:131-212; quantized recall tests
-KNNJVectorTests.java:1060-1233).
+  * ``pq``  product quantization: M per-subspace codebook indices,
+    scored by ADC lookup tables (JVectorWriter.getPQVectors,
+    JVectorWriter.java:381-414; subspace sizing JVectorFormat.java:
+    147-178);
+  * ``sq``  int8 scalar quantization, one max-abs scale per vector, no
+    trained state;
+  * ``bq``  1-bit codes against per-dimension mean thresholds, ranked by
+    hamming distance (OneBitScalarQuantizer.java:25-88);
+  * ``msq`` b threshold planes per dimension, hamming over every plane
+    (MultiBitScalarQuantizer.java).
 
-Spark-first shape:
-  * codebooks train DRIVER-SIDE on a deterministic bounded sample
-    (parquet min/max pushdown prunes the sample read — never a corpus
-    scan), exactly like the reference trains PQ on a training subset;
-  * encoding is one vectorized pandas-UDF pass at ivf_build time —
-    codes are stored NEXT TO the full vectors in the cell-partitioned
-    index, so the approximate pass reads only the tiny ``code`` +
-    ``norm`` columns (parquet column pruning: at dim 768 float64 a
-    vector is 6 KB, an M=8 code is 8 bytes — ~700x fewer bytes through
-    the scan);
-  * queries build an ADC (asymmetric distance computation) lookup
-    table driver-side — M x n_codes partial dot products — broadcast
-    it, score codes with one numpy gather+sum per batch, keep the top
-    k*overquery candidates, and rerank ONLY those against the full
-    vectors (a second pruned read with a vec_id pushdown filter).
-
-Everything is float64 numpy; codebooks are deterministic functions of
-(sample, m, n_codes, iters, seed), so rebuilds are idempotent.
+An entry holds a quantizer's whole contract: the ``ivf_build`` option
+that turns it on, its cell code columns and the columns its first pass
+reads, the spaces it supports, train (from the one shared build
+sample), encode, save/load of the trained state, the per-query operand
+and the first-pass proxy. ``ivf_build`` trains and encodes, ``ivf_append``
+loads and encodes (codebook reuse on merge, JVectorWriter.java:886-913),
+and queries score the small code columns first, then rerank survivors
+against full vectors (JVectorReader.java:131-212). Everything is float64
+numpy; trained states are deterministic functions of the sample.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from dataclasses import dataclass
+from typing import Callable
 
 import numpy as np
 
@@ -178,27 +175,11 @@ def bq_hamming(codes: np.ndarray, qcode: np.ndarray) -> np.ndarray:
 
 
 def save_bq(index_dir: str, thresholds: np.ndarray) -> None:
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    d = os.path.join(index_dir, "bq")
-    os.makedirs(d, exist_ok=True)
-    pq.write_table(
-        pa.table({"dim": np.arange(len(thresholds)),
-                  "threshold": thresholds}),
-        os.path.join(d, "thresholds.parquet"),
-    )
+    _save_state(index_dir, thresholds, *_BQ_FILE)
 
 
 def load_bq(index_dir: str) -> np.ndarray | None:
-    import pyarrow.parquet as pq
-
-    p = os.path.join(index_dir, "bq", "thresholds.parquet")
-    if not os.path.exists(p):
-        return None
-    t = pq.read_table(p)
-    th = np.asarray(t["threshold"].to_pylist(), dtype=np.float64)
-    return th[np.argsort(t["dim"].to_numpy())]
+    return _load_state(index_dir, *_BQ_FILE)
 
 
 # ---- multi-bit scalar quantization (MultiBitScalarQuantizer analog) --
@@ -249,74 +230,226 @@ def msq_hamming(codes: np.ndarray, qcode: np.ndarray) -> np.ndarray:
 
 
 def save_msq(index_dir: str, thresholds: np.ndarray) -> None:
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    bits, dim = thresholds.shape
-    d = os.path.join(index_dir, "msq")
-    os.makedirs(d, exist_ok=True)
-    pq.write_table(
-        pa.table(
-            {
-                "plane": np.repeat(np.arange(bits), dim),
-                "dim": np.tile(np.arange(dim), bits),
-                "threshold": thresholds.reshape(-1),
-            }
-        ),
-        os.path.join(d, "thresholds.parquet"),
-    )
-    meta = os.path.join(d, "meta.json")
-    with open(meta + ".tmp", "w") as f:
-        json.dump({"bits": int(bits), "dim": int(dim)}, f)
-    os.replace(meta + ".tmp", meta)
+    _save_state(index_dir, thresholds, *_MSQ_FILE)
 
 
 def load_msq(index_dir: str) -> np.ndarray | None:
-    import pyarrow.parquet as pq
-
-    meta_path = os.path.join(index_dir, "msq", "meta.json")
-    if not os.path.exists(meta_path):
-        return None
-    with open(meta_path) as f:
-        meta = json.load(f)
-    t = pq.read_table(os.path.join(index_dir, "msq", "thresholds.parquet"))
-    th = np.asarray(t["threshold"].to_pylist(), dtype=np.float64)
-    order = np.lexsort((t["dim"].to_numpy(), t["plane"].to_numpy()))
-    return th[order].reshape(meta["bits"], meta["dim"])
+    return _load_state(index_dir, *_MSQ_FILE)
 
 
-# ---- persisted codebooks (live inside the IVF index dir) ----
+# ---- persisted trained states (live inside the IVF index dir) ----
+# One parquet row per index of a state's leading axes, the value column
+# holding a scalar or the trailing axis as a list; meta.json keeps the
+# shape where the rows alone cannot give it. (subdir, file, index
+# columns, value column, meta keys):
+_PQ_FILE = ("pq", "codebooks.parquet", ("sub", "code"), "centroid",
+            ("m", "n_codes", "dsub"))
+_BQ_FILE = ("bq", "thresholds.parquet", ("dim",), "threshold", ())
+_MSQ_FILE = ("msq", "thresholds.parquet", ("plane", "dim"), "threshold",
+             ("bits", "dim"))
 
-def save_codebooks(index_dir: str, codebooks: np.ndarray) -> None:
+
+def _save_state(index_dir, state, sub, fname, axes, value, meta) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    m, n_codes, dsub = codebooks.shape
-    t = pa.table(
-        {
-            "sub": np.repeat(np.arange(m), n_codes),
-            "code": np.tile(np.arange(n_codes), m),
-            "centroid": list(codebooks.reshape(m * n_codes, dsub)),
-        }
+    lead = state.shape[: len(axes)]
+    cols = dict(zip(axes, np.indices(lead).reshape(len(axes), -1)))
+    cols[value] = (
+        list(state.reshape(int(np.prod(lead)), -1))
+        if state.ndim > len(axes) else state.reshape(-1)
     )
-    d = os.path.join(index_dir, "pq")
+    d = os.path.join(index_dir, sub)
     os.makedirs(d, exist_ok=True)
-    pq.write_table(t, os.path.join(d, "codebooks.parquet"))
-    meta = os.path.join(d, "meta.json")
-    with open(meta + ".tmp", "w") as f:
-        json.dump({"m": int(m), "n_codes": int(n_codes), "dsub": int(dsub)}, f)
-    os.replace(meta + ".tmp", meta)
+    pq.write_table(pa.table(cols), os.path.join(d, fname))
+    if meta:
+        path = os.path.join(d, "meta.json")
+        with open(path + ".tmp", "w") as f:
+            json.dump({k: int(n) for k, n in zip(meta, state.shape)}, f)
+        os.replace(path + ".tmp", path)
+
+
+def _load_state(index_dir, sub, fname, axes, value, meta):
+    import pyarrow.parquet as pq
+
+    d = os.path.join(index_dir, sub)
+    if not os.path.exists(os.path.join(d, "meta.json" if meta else fname)):
+        return None
+    t = pq.read_table(os.path.join(d, fname))
+    vals = np.array(t[value].to_pylist(), dtype=np.float64)
+    vals = vals[np.lexsort([t[a].to_numpy() for a in reversed(axes)])]
+    if not meta:
+        return vals
+    with open(os.path.join(d, "meta.json")) as f:
+        shape = json.load(f)
+    return vals.reshape([shape[k] for k in meta])
+
+
+def save_codebooks(index_dir: str, codebooks: np.ndarray) -> None:
+    _save_state(index_dir, codebooks, *_PQ_FILE)
 
 
 def load_codebooks(index_dir: str) -> np.ndarray | None:
-    import pyarrow.parquet as pq
+    return _load_state(index_dir, *_PQ_FILE)
 
-    meta_path = os.path.join(index_dir, "pq", "meta.json")
-    if not os.path.exists(meta_path):
-        return None
-    with open(meta_path) as f:
-        meta = json.load(f)
-    t = pq.read_table(os.path.join(index_dir, "pq", "codebooks.parquet"))
-    flat = np.array(t["centroid"].to_pylist(), dtype=np.float64)
-    order = np.lexsort((t["code"].to_numpy(), t["sub"].to_numpy()))
-    return flat[order].reshape(meta["m"], meta["n_codes"], meta["dsub"])
+
+# ---- first-pass proxies ----
+
+#: spaces whose candidate ranking a dot-product-based quantized proxy
+#: can reproduce (cosine/l2 via norm correction, ip directly); l1/linf
+#: distances are not functions of dots, so quantized passes reject them
+QUANTIZABLE_SPACES = ("cosine", "l2", "innerproduct")
+
+
+def proxy_from_dots(
+    dots: np.ndarray, norms: np.ndarray, qn, space: str
+) -> np.ndarray:
+    """Candidate-ranking proxy from approximate dot products. The proxy
+    must be MONOTONE in the exact score per space, else genuine top-k
+    members get pruned before the rerank can recover them:
+      cosine: dot / (|v| |q|);
+      l2:     2*dot - |v|^2 (== -|v-q|^2 + const; raw dot is NOT
+              monotone in l2 when vector norms vary — a far large-norm
+              vector would outrank a true neighbor, round-3 ADVICE);
+      ip:     dot (the SpaceType ip translation is increasing in dot).
+    ``norms`` and ``qn`` broadcast against ``dots`` (rows x queries)."""
+    if space == "cosine":
+        return dots / (
+            np.where(norms == 0, 1.0, norms) * np.where(qn == 0, 1.0, qn)
+        )
+    if space == "l2":
+        return 2.0 * dots - norms**2
+    if space == "innerproduct":
+        return dots
+    raise ValueError(f"no quantized proxy for space {space!r}")
+
+
+def _codes(col, dtype, width: int) -> np.ndarray:
+    """(rows, width) code matrix of a binary code column."""
+    return np.frombuffer(b"".join(col.to_numpy()), dtype=dtype).reshape(
+        len(col), width
+    )
+
+
+def _rows(codes: np.ndarray) -> list:
+    return [c.tobytes() for c in codes]
+
+
+def _dot_proxy(grp, dots: np.ndarray, qn: np.ndarray, space: str):
+    norms = grp["norm"].to_numpy(dtype=np.float64)
+    return proxy_from_dots(dots, norms[:, None], qn[None, :], space)
+
+
+def _pq_proxy(grp, T, qn, space):
+    return _dot_proxy(
+        grp, adc_scores(_codes(grp["code"], np.uint8, T.shape[1]), T), qn,
+        space,
+    )
+
+
+def _sq_proxy(grp, Qs, qn, space):
+    dots = sq_scores(
+        _codes(grp["sq_code"], np.int8, Qs.shape[1]),
+        grp["sq_scale"].to_numpy(dtype=np.float64), Qs,
+    )
+    return _dot_proxy(grp, dots, qn, space)
+
+
+def _hamming_proxy(col, qcodes: np.ndarray) -> np.ndarray:
+    # fewer differing threshold bits = closer angle; negated for the
+    # shared desc ranking (the exact rerank restores true order)
+    C = _codes(col, np.uint8, qcodes.shape[1])
+    return -np.stack([bq_hamming(C, qc) for qc in qcodes], axis=1).astype(
+        np.float64
+    )
+
+
+def _sq_encode_cols(M, _state) -> dict:
+    codes, scales = sq_encode(M)
+    return {"sq_code": _rows(codes), "sq_scale": scales}
+
+
+# ---- the registry ----
+
+@dataclass(frozen=True)
+class Quantizer:
+    """One quantizer's whole on-disk and query contract.
+
+    ``encode(M, state)`` maps a (b, d) vector matrix to its cell code
+    columns; ``operand(state, Q)`` is the driver-side per-query operand
+    (row i for query i); ``proxy(cell_group, operand_rows, qnorms,
+    space)`` is the (rows, queries) first-pass ranking proxy, higher =
+    closer, identical codes always scoring identically. ``train``,
+    ``save`` and ``load`` are None for a quantizer without trained
+    state (SQ)."""
+
+    name: str
+    option: str  # the ivf_build option that turns it on
+    columns: str  # DDL of the code columns stored in every cell
+    scan: str  # DDL of the columns its first pass reads
+    spaces: tuple
+    encode: Callable
+    operand: Callable
+    proxy: Callable
+    train: Callable | None = None  # (sample, ivf_build options) -> state
+    save: Callable | None = None
+    load: Callable | None = None
+    state_name: str = ""  # what ``load`` reads, for error messages
+
+    @property
+    def column_names(self) -> tuple:
+        return tuple(c.split()[0] for c in self.columns.split(", "))
+
+    @property
+    def scan_names(self) -> tuple:
+        return tuple(c.split()[0] for c in self.scan.split(", "))
+
+
+#: registry order is the v1 cell column order:
+#: (vec_id, v, norm [,code][,sq_code, sq_scale][,bq_code][,msq_code])
+QUANTIZERS = {
+    q.name: q
+    for q in (
+        Quantizer(
+            "pq", "pq_m", "code binary", "norm double, code binary",
+            QUANTIZABLE_SPACES,
+            encode=lambda M, cb: {"code": _rows(pq_encode(M, cb))},
+            operand=lambda cb, Q: np.stack([adc_table(q, cb) for q in Q]),
+            proxy=_pq_proxy,
+            train=lambda s, o: pq_train(
+                s, m=o["pq_m"], n_codes=o["pq_codes"]
+            ),
+            save=save_codebooks, load=load_codebooks,
+            state_name="pq codebooks",
+        ),
+        Quantizer(
+            "sq", "sq", "sq_code binary, sq_scale double",
+            "norm double, sq_code binary, sq_scale double",
+            QUANTIZABLE_SPACES,
+            encode=_sq_encode_cols,
+            operand=lambda _, Q: Q,
+            proxy=_sq_proxy,
+        ),
+        Quantizer(
+            "bq", "bq", "bq_code binary", "bq_code binary", ("cosine",),
+            encode=lambda M, th: {"bq_code": _rows(bq_encode(M, th))},
+            operand=lambda th, Q: bq_encode(Q, th),
+            proxy=lambda grp, qc, qn, space: _hamming_proxy(
+                grp["bq_code"], qc
+            ),
+            train=lambda s, o: bq_train(s),
+            save=save_bq, load=load_bq, state_name="bq thresholds",
+        ),
+        Quantizer(
+            "msq", "msq_bits", "msq_code binary", "msq_code binary",
+            ("cosine",),
+            encode=lambda M, th: {"msq_code": _rows(msq_encode(M, th))},
+            operand=lambda th, Q: msq_encode(Q, th),
+            proxy=lambda grp, qc, qn, space: _hamming_proxy(
+                grp["msq_code"], qc
+            ),
+            train=lambda s, o: msq_train(s, o["msq_bits"]),
+            save=save_msq, load=load_msq, state_name="msq threshold planes",
+        ),
+    )
+}

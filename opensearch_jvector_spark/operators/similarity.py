@@ -6,8 +6,9 @@ l1Norm:215 / lInfNorm:233 / innerProduct:251, KNNScoringSpace.java:
 131-235); the IVF-bucketed variant is the scale path (the reference's
 DiskANN approximate search + rerank analog: JVectorReader.search,
 JVectorReader.java:131-212 — prune candidates cheaply, score survivors
-exactly), optionally with PQ-compressed codes + exact rerank
-(operators/quantize.py — JVectorWriter.getPQVectors).
+exactly), optionally with a quantized first pass + exact rerank
+(one operators/quantize.py QUANTIZERS entry per quantizer —
+JVectorWriter.getPQVectors).
 
 Similarity spaces mirror SpaceType.java:43-161 with the reference's
 score translations (l2/l1/linf: 1/(1+distance); innerproduct:
@@ -30,6 +31,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .quantize import QUANTIZERS
 
 SPACES = ("cosine", "l2", "l1", "linf", "innerproduct")
 
@@ -267,12 +270,6 @@ def cosine_topk_bruteforce(
 
 # ---------------------------------------------------------------- IVF
 
-#: spaces whose candidate ranking a dot-product-based quantized proxy
-#: can reproduce (cosine/l2 via norm correction, ip directly); l1/linf
-#: distances are not functions of dots, so quantized passes reject them
-QUANTIZABLE_SPACES = ("cosine", "l2", "innerproduct")
-
-
 def _np_space_scores(
     M: np.ndarray, C: np.ndarray, space: str
 ) -> np.ndarray:
@@ -326,29 +323,6 @@ def rescore_first_pass_k(k: int, dim: int, overquery: int | None) -> int:
     return min(10_000, max(100, math.ceil(k * f)))
 
 
-def _proxy_from_dots(
-    dots: np.ndarray, norms: np.ndarray, qn, space: str
-) -> np.ndarray:
-    """Candidate-ranking proxy from approximate dot products. The proxy
-    must be MONOTONE in the exact score per space, else genuine top-k
-    members get pruned before the rerank can recover them:
-      cosine: dot / (|v| |q|);
-      l2:     2*dot - |v|^2 (== -|v-q|^2 + const; raw dot is NOT
-              monotone in l2 when vector norms vary — a far large-norm
-              vector would outrank a true neighbor, round-3 ADVICE);
-      ip:     dot (the SpaceType ip translation is increasing in dot).
-    ``norms`` and ``qn`` broadcast against ``dots`` (rows x queries)."""
-    if space == "cosine":
-        return dots / (
-            np.where(norms == 0, 1.0, norms) * np.where(qn == 0, 1.0, qn)
-        )
-    if space == "l2":
-        return 2.0 * dots - norms**2
-    if space == "innerproduct":
-        return dots
-    raise ValueError(f"no quantized proxy for space {space!r}")
-
-
 def _stack_batch(vs: pd.Series, expect_dim: int | None) -> np.ndarray:
     M = np.stack([np.asarray(x, dtype=np.float64) for x in vs])
     if expect_dim is not None and M.shape[1] != expect_dim:
@@ -356,6 +330,27 @@ def _stack_batch(vs: pd.Series, expect_dim: int | None) -> np.ndarray:
             f"embedding dimension {M.shape[1]} != expected {expect_dim}"
         )
     return M
+
+
+def _add_codes(lists: DataFrame, states: dict, dim: int) -> DataFrame:
+    """``lists`` plus the cell code columns of every quantizer in
+    ``states`` (name -> trained state), in registry order — one
+    vectorized kernel encodes each Arrow batch for all of them."""
+    if not states:
+        return lists
+    qs = [q for q in QUANTIZERS.values() if q.name in states]
+    bc = lists.sparkSession.sparkContext.broadcast(states)
+
+    @F.pandas_udf(", ".join(q.columns for q in qs))
+    def encode(vs: pd.Series) -> pd.DataFrame:
+        M, st = _stack_batch(vs, dim), bc.value
+        return pd.DataFrame(
+            {c: v for q in qs for c, v in q.encode(M, st[q.name]).items()}
+        )
+
+    return lists.withColumn("_codes", encode(F.col("v"))).select(
+        *lists.columns, "_codes.*"
+    )
 
 
 def ivf_assign(
@@ -484,7 +479,6 @@ def ivf_build(
     pq_m: int | None = None,
     pq_codes: int = 32,
     pq_sample: int = 4096,
-    pq_sample_mode: str = "hash",
     sq: bool = False,
     bq: bool = False,
     msq_bits: int | None = None,
@@ -496,21 +490,23 @@ def ivf_build(
     JVectorReader.java:131-212). Layout:
 
       <index_dir>/cells/cell=C/   inverted lists: (vec_id, v, norm
-                                  [, code]) — vectors CO-LOCATED with
-                                  their cell, so a query reads only its
-                                  probed cell directories (partition
-                                  pruning, never a corpus scan);
+                                  [, code columns]) — vectors
+                                  CO-LOCATED with their cell, so a
+                                  query reads only its probed cell
+                                  directories (partition pruning,
+                                  never a corpus scan);
       <index_dir>/centroids/      (cell, c) — tiny, read driver-side;
-      <index_dir>/pq/             PQ codebooks when ``pq_m`` is set
-                                  (quantize.py — JVectorWriter
-                                  .getPQVectors analog).
+      <index_dir>/pq/ bq/ msq/    trained quantizer states.
 
     Centroids: deterministic first-N seeds, refined by ``kmeans_iters``
     Lloyd iterations (numpy assign kernel + per-partition partial-sum
     re-centering — one distributed pass per iteration, constant plan
-    size at any dimension). With ``pq_m``, every vector also stores an
-    M-byte PQ code so queries can score codes first and rerank only
-    survivors against full vectors.
+    size at any dimension). ``pq_m`` (with ``pq_codes``), ``sq``,
+    ``bq`` and ``msq_bits`` each turn on one ``quantize.QUANTIZERS``
+    entry: every vector also stores that quantizer's codes, so queries
+    can score codes first and rerank only survivors against full
+    vectors (JVectorWriter.getPQVectors analog). The quantizers that
+    train share one ``pq_sample``-row sample.
 
     ``coarse`` adds a TWO-LEVEL probe structure: the fine centroids are
     themselves clustered into ~sqrt(n_centroids) groups (pass an int to
@@ -534,76 +530,18 @@ def ivf_build(
     )
 
     # one sampling job feeds every quantizer that trains (PQ codebooks,
-    # BQ thresholds) — they deliberately share the same subset
+    # BQ/MSQ thresholds) — they deliberately share the same subset
+    opts = {"pq_m": pq_m, "pq_codes": pq_codes, "sq": sq, "bq": bq,
+            "msq_bits": msq_bits}
+    active = [q for q in QUANTIZERS.values() if opts[q.option]]
     sample = (
-        _pq_training_sample(e, pq_sample, pq_sample_mode)
-        if (pq_m is not None or bq or msq_bits)
-        else None
+        _pq_training_sample(e, pq_sample)
+        if any(q.train for q in active) else None
     )
-    codebooks = None
-    if pq_m is not None:
-        from .quantize import pq_encode, pq_train, save_codebooks
-
-        codebooks = pq_train(sample, m=pq_m, n_codes=pq_codes)
-        bc = embeddings.sparkSession.sparkContext.broadcast(codebooks)
-
-        @F.pandas_udf("binary")
-        def encode(vs: pd.Series) -> pd.Series:
-            cb = bc.value
-            M = _stack_batch(vs, cb.shape[0] * cb.shape[2])
-            codes = pq_encode(M, cb)
-            return pd.Series([c.tobytes() for c in codes])
-
-        lists = lists.withColumn("code", encode(F.col("v")))
-    if sq:
-        from .quantize import sq_encode
-
-        @F.pandas_udf("sq_code binary, sq_scale double")
-        def sq_cols(vs: pd.Series) -> pd.DataFrame:
-            codes, scales = sq_encode(_stack_batch(vs, None))
-            return pd.DataFrame(
-                {"sq_code": [c.tobytes() for c in codes], "sq_scale": scales}
-            )
-
-        lists = lists.withColumn("_sq", sq_cols(F.col("v")))
-        lists = lists.select(
-            *[c for c in lists.columns if c != "_sq"],
-            F.col("_sq.sq_code").alias("sq_code"),
-            F.col("_sq.sq_scale").alias("sq_scale"),
-        )
-    thresholds = None
-    if bq:
-        from .quantize import bq_encode, bq_train
-
-        thresholds = bq_train(sample)
-        bct = embeddings.sparkSession.sparkContext.broadcast(thresholds)
-
-        @F.pandas_udf("binary")
-        def bq_col(vs: pd.Series) -> pd.Series:
-            th = bct.value
-            return pd.Series(
-                [c.tobytes() for c in bq_encode(_stack_batch(vs, len(th)), th)]
-            )
-
-        lists = lists.withColumn("bq_code", bq_col(F.col("v")))
-    msq_thresholds = None
-    if msq_bits:
-        from .quantize import msq_encode, msq_train
-
-        msq_thresholds = msq_train(sample, msq_bits)
-        bcm = embeddings.sparkSession.sparkContext.broadcast(msq_thresholds)
-
-        @F.pandas_udf("binary")
-        def msq_col(vs: pd.Series) -> pd.Series:
-            th = bcm.value
-            return pd.Series(
-                [
-                    c.tobytes()
-                    for c in msq_encode(_stack_batch(vs, th.shape[1]), th)
-                ]
-            )
-
-        lists = lists.withColumn("msq_code", msq_col(F.col("v")))
+    states = {
+        q.name: q.train(sample, opts) if q.train else None for q in active
+    }
+    lists = _add_codes(lists, states, C.shape[1])
 
     (
         lists.repartition("cell")
@@ -619,18 +557,9 @@ def ivf_build(
         pa.table({"cell": np.arange(len(C), dtype=np.int64), "c": list(C)}),
         os.path.join(index_dir, "centroids", "centroids.parquet"),
     )
-    if codebooks is not None:
-        from .quantize import save_codebooks
-
-        save_codebooks(index_dir, codebooks)
-    if thresholds is not None:
-        from .quantize import save_bq
-
-        save_bq(index_dir, thresholds)
-    if msq_thresholds is not None:
-        from .quantize import save_msq
-
-        save_msq(index_dir, msq_thresholds)
+    for q in active:
+        if q.save:
+            q.save(index_dir, states[q.name])
     if coarse:
         _build_coarse_layer(
             index_dir,
@@ -644,54 +573,34 @@ def ivf_build(
         space=space,
         dim=int(np.asarray(C).shape[1]),
         n_centroids=int(len(C)),
-        quantizers=[
-            q
-            for q, on in (
-                ("pq", pq_m is not None),
-                ("sq", sq),
-                ("bq", bq),
-                ("msq", bool(msq_bits)),
-            )
-            if on
-        ],
+        quantizers=list(states),
         coarse=bool(coarse),
     )
     return index_dir
 
 
-def _pq_training_sample(
-    e: DataFrame, pq_sample: int, mode: str = "hash"
-) -> np.ndarray:
-    """Deterministic, ORDER-UNBIASED PQ training sample. Round 3 took
-    ``vec_id < pq_sample`` — reproducible but biased: on a real corpus
-    low ids are one crawl/domain/time slice, and codebooks trained on
-    them silently misfit the rest (the reference trains on a reservoir
-    sample, quantization/sampler/ReservoirSampler.java). ``hash`` mode
-    keeps a row iff ``xxhash64(vec_id) % p == 0`` with p sized from the
+def _pq_training_sample(e: DataFrame, pq_sample: int) -> np.ndarray:
+    """Deterministic, ORDER-UNBIASED quantizer training sample. Round 3
+    took ``vec_id < pq_sample`` — reproducible but biased: on a real
+    corpus low ids are one crawl/domain/time slice, and codebooks
+    trained on them silently misfit the rest (the reference trains on a
+    reservoir sample, quantization/sampler/ReservoirSampler.java). A
+    row is kept iff ``xxhash64(vec_id) % p == 0`` with p sized from the
     corpus count — same determinism (fixed xxhash64 seed), no ordering
-    bias, one pushed-down id-column count + one pruned sample read.
-    ``first`` preserves the legacy rule (kept for the adversarial-order
-    A/B pytest)."""
-    if mode == "first":
-        rows = (
-            e.filter(F.col("vec_id") < pq_sample).orderBy("vec_id").collect()
-        )
-    elif mode == "hash":
-        n = e.count()
-        # ceil, not floor: floor degenerates to p=1 (keep everything)
-        # whenever pq_sample <= n < 2*pq_sample, and the orderBy+limit
-        # then takes exactly the lowest-id slice — the first-N bias this
-        # mode exists to avoid (round-4 ADVICE). Ceil accepts a slightly
-        # smaller sample so the kept set always spans the id range.
-        p = max(1, -(-n // pq_sample))
-        rows = (
-            e.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(p)) == 0)
-            .orderBy("vec_id")
-            .limit(pq_sample)
-            .collect()
-        )
-    else:
-        raise ValueError(f"pq_sample_mode must be 'hash' or 'first', got {mode!r}")
+    bias, one pushed-down id-column count + one pruned sample read."""
+    n = e.count()
+    # ceil, not floor: floor degenerates to p=1 (keep everything)
+    # whenever pq_sample <= n < 2*pq_sample, and the orderBy+limit
+    # then takes exactly the lowest-id slice — the first-N bias this
+    # sample exists to avoid (round-4 ADVICE). Ceil accepts a slightly
+    # smaller sample so the kept set always spans the id range.
+    p = max(1, -(-n // pq_sample))
+    rows = (
+        e.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(p)) == 0)
+        .orderBy("vec_id")
+        .limit(pq_sample)
+        .collect()
+    )
     if not rows:
         raise ValueError("empty PQ training sample")
     return np.array([r["v"] for r in rows], dtype=np.float64)
@@ -751,9 +660,9 @@ _CENTROID_CACHE = _LRUBytes(CENTROID_CACHE_MAX_BYTES)
 #: compatibility across upgrades in qa/restart-upgrade/IndexingIT.java:
 #: 46-358 — an old index must answer identically after a code upgrade).
 #: Bump ONLY with a reader for the old layout or an explicit migration.
-#: History: 1 = cells/cell=N (vec_id, v, norm [,code][,sq_code,
-#: sq_scale][,bq_code][,msq_code]) + centroids/ + optional pq/ bq/ msq/
-#: tombstones/ coarse/ centroid_groups/.
+#: History: 1 = cells/cell=N (vec_id, v, norm [, each quantizer's code
+#: columns in quantize.QUANTIZERS order]) + centroids/ + optional pq/
+#: bq/ msq/ tombstones/ coarse/ centroid_groups/.
 ANN_FORMAT_VERSION = 1
 
 _ANN_MANIFEST = "index_manifest.json"
@@ -1320,99 +1229,61 @@ def _rank_topk(
     )
 
 
-#: first-pass quantizers: name -> (the ivf_build option that stores its
-#: codes, the quantize.py loader of its trained state or None, the
-#: columns its first pass reads)
-_QUANTIZERS = {
-    "pq": ("pq_m", "load_codebooks", "norm double, code binary"),
-    "sq": ("sq", None, "norm double, sq_code binary, sq_scale double"),
-    "bq": ("bq", "load_bq", "bq_code binary"),
-    "msq": ("msq_bits", "load_msq", "msq_code binary"),
-}
+def _carried_quantizers(index_dir: str, names=tuple(QUANTIZERS)) -> dict:
+    """name -> trained state (None for SQ) of each quantizer among
+    ``names`` whose code columns the index's cells carry, read from one
+    cell file's footer. A carried quantizer whose trained state is gone
+    raises here, driver-side, before any Spark job."""
+    import pyarrow.parquet as papq
+
+    cells_dir = os.path.join(index_dir, "cells")
+    first = next((
+        os.path.join(base, fn)
+        for path in _all_cell_paths(index_dir)
+        for base, _, fns in os.walk(path)
+        for fn in fns if fn.endswith(".parquet")
+    ), None)
+    if first is None:
+        raise ValueError(f"no existing cell files under {cells_dir}")
+    cols = set(papq.ParquetFile(first).schema_arrow.names)
+    carried = {}
+    for q in (QUANTIZERS[n] for n in names):
+        if not cols.issuperset(q.column_names):
+            continue
+        carried[q.name] = q.load(index_dir) if q.load else None
+        if q.load and carried[q.name] is None:
+            raise ValueError(
+                f"cells at {cells_dir} carry {q.name} codes but "
+                f"{index_dir} has no {q.state_name}"
+            )
+    return carried
 
 
 def _resolve_quantizer(
     index_dir: str, space: str, use_pq=False, use_sq=False, use_bq=False,
     use_msq=False,
 ) -> tuple | None:
-    """The ``use_*`` flags as one (quantizer name, trained state), or
-    None for exact scoring — validated and loaded driver-side before
-    any Spark job runs."""
+    """The ``use_*`` flags as one (``QUANTIZERS`` entry, trained
+    state), or None for exact scoring — validated and loaded
+    driver-side before any Spark job runs."""
     on = [
-        name for name, flag in zip(_QUANTIZERS, (use_pq, use_sq, use_bq,
-                                                 use_msq)) if flag
+        q for q, flag in zip(QUANTIZERS.values(),
+                             (use_pq, use_sq, use_bq, use_msq)) if flag
     ]
     if not on:
         return None
     if len(on) > 1:
         raise ValueError("choose one of use_pq / use_sq / use_bq / use_msq")
-    name = on[0]
-    if name in ("bq", "msq"):
-        if space != "cosine":
-            raise ValueError(
-                "bit-quantized passes are angular (threshold-bit hamming) "
-                "proxies; cosine only"
-            )
-    elif space not in QUANTIZABLE_SPACES:
+    q = on[0]
+    if space not in q.spaces:
         raise ValueError(
-            f"quantized pass supports {QUANTIZABLE_SPACES}, got {space!r}"
+            f"the {q.name} first pass ranks {' / '.join(q.spaces)} only, "
+            f"got {space!r}"
         )
-    option, loader, _ = _QUANTIZERS[name]
-    state = None
-    if loader is not None:
-        from . import quantize
-
-        state = getattr(quantize, loader)(index_dir)
-        if state is None:
-            raise ValueError(f"index at {index_dir} was built without {option}")
-    return name, state
-
-
-def _encode_queries(name: str, state, Q: np.ndarray):
-    """Driver-side per-query operand of the first pass: PQ ADC tables
-    (nq, m, n_codes), BQ/MSQ packed query codes; SQ scores the raw
-    queries (None)."""
-    from .quantize import adc_table, bq_encode, msq_encode
-
-    if name == "pq":
-        return np.stack([adc_table(q, state) for q in Q])
-    if name == "bq":
-        return bq_encode(Q, state)
-    if name == "msq":
-        return msq_encode(Q, state)
-    return None
-
-
-def _first_pass(
-    name: str, grp: pd.DataFrame, enc, Qs: np.ndarray, qn: np.ndarray,
-    space: str,
-) -> np.ndarray:
-    """(rows, queries) candidate-ranking proxy of one cell group from
-    its codes alone, higher = closer; ``enc``/``Qs``/``qn`` hold the
-    group's queries. Identical codes always get identical proxies, so
-    the tie-safe cut keeps every duplicate of a tied candidate."""
-    from .quantize import adc_scores, bq_hamming, sq_scores
-
-    def codes(col, dtype, width):
-        return np.frombuffer(
-            b"".join(grp[col].to_numpy()), dtype=dtype
-        ).reshape(len(grp), width)
-
-    if name in ("bq", "msq"):
-        C = codes(f"{name}_code", np.uint8, enc.shape[1])
-        # fewer differing threshold bits = closer angle; negated for
-        # the shared desc ranking (the exact rerank restores true order)
-        H = np.stack([bq_hamming(C, qc) for qc in enc], axis=1)
-        return -H.astype(np.float64)
-    if name == "pq":
-        dots = adc_scores(codes("code", np.uint8, enc.shape[1]), enc)
-    else:
-        dots = sq_scores(
-            codes("sq_code", np.int8, Qs.shape[1]),
-            grp["sq_scale"].to_numpy(dtype=np.float64), Qs,
-        )
-    norms = grp["norm"].to_numpy(dtype=np.float64)
-    return _proxy_from_dots(dots, norms[:, None], qn[None, :], space)
+    carried = _carried_quantizers(index_dir, [q.name])
+    if q.name not in carried:
+        raise ValueError(f"index at {index_dir} was built without {q.option}")
+    return q, carried[q.name]
 
 
 def _cut(S: np.ndarray, k: int, min_score: float | None) -> np.ndarray:
@@ -1433,12 +1304,12 @@ def _cut(S: np.ndarray, k: int, min_score: float | None) -> np.ndarray:
 def _scan_scores(
     scan: DataFrame, qids: list, Q: np.ndarray, space: str, out: str,
     keep: int, min_score: float | None = None, cell_to_q: dict | None = None,
-    quantizer: str | None = None, enc=None,
+    quantizer=None, enc=None,
 ) -> DataFrame:
     """(query_id, vec_id, <out>) for every scanned row against the
     queries that probed its cell (every query when ``cell_to_q`` is
-    None): exact scores, or the named ``quantizer``'s first-pass proxy
-    from the per-query operands ``enc``. One vectorized kernel per cell
+    None): exact scores, or the ``quantizer`` entry's first-pass proxy
+    from its per-query operands ``enc``. One vectorized kernel per cell
     group of each Arrow batch, and the tie-safe ``keep``/``min_score``
     cut per query bounds what reaches the shuffle."""
     qn = np.linalg.norm(Q, axis=1)
@@ -1470,10 +1341,7 @@ def _scan_scores(
                         Qm[idxs], qn[idxs], space,
                     )
                 else:
-                    S = _first_pass(
-                        quantizer, grp, None if enc is None else enc[idxs],
-                        Qm[idxs], qn[idxs], space,
-                    )
+                    S = quantizer.proxy(grp, enc[idxs], qn[idxs], space)
                 r, c = np.nonzero(_cut(S, keep, min_score))
                 frames.append(pd.DataFrame({
                     "query_id": ids[idxs[c]],
@@ -1599,12 +1467,11 @@ def _ivf_search(
 
     # pass 1: code columns only (column pruning keeps vector bytes on
     # disk); the allow-list masks BEFORE the budget cut
-    name, state = quantizer
-    code_cols = _QUANTIZERS[name][2]
+    q, state = quantizer
     budget = rescore_first_pass_k(k, Q.shape[1], overquery)
     approx = _scan_scores(
-        probed(code_cols), qids, Q, space, "a", budget, None, cell_to_q,
-        name, _encode_queries(name, state, Q),
+        probed(q.scan), qids, Q, space, "a", budget, None, cell_to_q,
+        q, q.operand(state, Q),
     )
     cand_rows = (
         _rank_per_query(approx, budget, "a")
@@ -1612,8 +1479,7 @@ def _ivf_search(
     )
     if metrics is not None:
         metrics.update(_pq_bytes_metrics(
-            paths, len({r["vec_id"] for r in cand_rows}),
-            tuple(c.split()[0] for c in code_cols.split(", ")),
+            paths, len({r["vec_id"] for r in cand_rows}), q.scan_names,
         ))
         metrics["n_queries"] = len(qids)
         # the batch reads the code columns ONCE for all queries and
@@ -1831,7 +1697,7 @@ def ivf_query_radial(
 
 
 def _pq_bytes_metrics(
-    paths: list[str], n_cand: int, approx_cols: tuple = ("code", "norm")
+    paths: list[str], n_cand: int, approx_cols: tuple
 ) -> dict:
     """Uncompressed bytes-through-the-scan accounting from parquet
     FOOTERS (no data pages read): the approximate pass reads only its
@@ -2316,15 +2182,13 @@ def ivf_append(
 ) -> dict:
     """Incremental ANN index maintenance (the reference's flagship
     incremental merge applied to the IVF index): assign NEW vectors to
-    the EXISTING centroids, encode them with the EXISTING PQ codebooks
-    / SQ scaling, and append per-cell parquet files — existing lists
-    are never rewritten or re-encoded, mirroring
+    the EXISTING centroids, encode them with every carried quantizer's
+    EXISTING trained state, and append per-cell parquet files —
+    existing lists are never rewritten or re-encoded, mirroring
     `GraphIndexBuilder.buildAndMergeNewNodes` (JVectorWriter.java:
     922-941) and codebook REUSE on merge (:886-913). Queries see the
     appended vectors on their next probe (the cell directory signature
     changes, so the driver-local cache invalidates itself)."""
-    import pyarrow.parquet as papq
-
     cells_dir = os.path.join(index_dir, "cells")
     _recover_cell_swaps(cells_dir)  # never sample/append into leftovers
     _, C = _load_centroids(index_dir)
@@ -2336,89 +2200,9 @@ def ivf_append(
         "cell", "vec_id", "v", _norm(F.col("v")).alias("norm")
     )
 
-    # match the existing on-disk schema: PQ codes / SQ columns present?
-    sample_file = None
-    for base, _, files in os.walk(cells_dir):
-        for fn in files:
-            if fn.endswith(".parquet"):
-                sample_file = os.path.join(base, fn)
-                break
-        if sample_file:
-            break
-    if sample_file is None:
-        raise ValueError(f"no existing cell files under {cells_dir}")
-    existing_cols = set(papq.ParquetFile(sample_file).schema_arrow.names)
-
-    if "code" in existing_cols:
-        from .quantize import load_codebooks, pq_encode
-
-        codebooks = load_codebooks(index_dir)
-        bc = spark.sparkContext.broadcast(codebooks)
-
-        @F.pandas_udf("binary")
-        def encode(vs: pd.Series) -> pd.Series:
-            cb = bc.value
-            Mv = _stack_batch(vs, cb.shape[0] * cb.shape[2])
-            return pd.Series([c.tobytes() for c in pq_encode(Mv, cb)])
-
-        lists = lists.withColumn("code", encode(F.col("v")))
-    if "sq_code" in existing_cols:
-        from .quantize import sq_encode
-
-        @F.pandas_udf("sq_code binary, sq_scale double")
-        def sq_cols(vs: pd.Series) -> pd.DataFrame:
-            codes, scales = sq_encode(_stack_batch(vs, None))
-            return pd.DataFrame(
-                {"sq_code": [c.tobytes() for c in codes], "sq_scale": scales}
-            )
-
-        lists = lists.withColumn("_sq", sq_cols(F.col("v")))
-        lists = lists.select(
-            *[c for c in lists.columns if c != "_sq"],
-            F.col("_sq.sq_code").alias("sq_code"),
-            F.col("_sq.sq_scale").alias("sq_scale"),
-        )
-    if "bq_code" in existing_cols:
-        from .quantize import bq_encode, load_bq
-
-        th = load_bq(index_dir)
-        if th is None:
-            raise ValueError(
-                f"cells at {cells_dir} carry bq_code but {index_dir} has "
-                "no bq thresholds"
-            )
-        bct = spark.sparkContext.broadcast(th)
-
-        @F.pandas_udf("binary")
-        def bq_col(vs: pd.Series) -> pd.Series:
-            t = bct.value
-            return pd.Series(
-                [c.tobytes() for c in bq_encode(_stack_batch(vs, len(t)), t)]
-            )
-
-        lists = lists.withColumn("bq_code", bq_col(F.col("v")))
-    if "msq_code" in existing_cols:
-        from .quantize import load_msq, msq_encode
-
-        mth = load_msq(index_dir)
-        if mth is None:
-            raise ValueError(
-                f"cells at {cells_dir} carry msq_code but {index_dir} has "
-                "no msq threshold planes"
-            )
-        bcm = spark.sparkContext.broadcast(mth)
-
-        @F.pandas_udf("binary")
-        def msq_col(vs: pd.Series) -> pd.Series:
-            t = bcm.value
-            return pd.Series(
-                [
-                    c.tobytes()
-                    for c in msq_encode(_stack_batch(vs, t.shape[1]), t)
-                ]
-            )
-
-        lists = lists.withColumn("msq_code", msq_col(F.col("v")))
+    # match the existing on-disk schema: every quantizer the cells
+    # carry encodes the new rows with its loaded (never retrained) state
+    lists = _add_codes(lists, _carried_quantizers(index_dir), C.shape[1])
 
     n = e.count()  # id-column count (pushed down), not a lists recompute
     if batch_tag is not None:

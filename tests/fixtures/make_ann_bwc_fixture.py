@@ -28,6 +28,11 @@ sys.path.insert(0, REPO)
 
 FIXTURE = os.path.join(REPO, "tests", "fixtures", "ann_bwc_v1")
 DIM, N, CELLS = 8, 64, 4
+#: the ivf_build options of the fixture index
+BUILD_ARGS = dict(
+    n_centroids=CELLS, kmeans_iters=1, pq_m=2, sq=True, bq=True, msq_bits=2,
+    coarse=True,
+)
 
 
 def vectors():
@@ -62,10 +67,7 @@ def main():
     df = spark.createDataFrame(
         vectors(), "vec_id long, embedding array<double>"
     )
-    ivf_build(
-        df, idx, n_centroids=CELLS, kmeans_iters=1, pq_m=2, sq=True,
-        bq=True, msq_bits=2, coarse=True,
-    )
+    ivf_build(df, idx, **BUILD_ARGS)
     ivf_delete(idx, [5, 11])  # ledger must survive in the fixture
 
     q = np.random.default_rng(7001).standard_normal(DIM).tolist()

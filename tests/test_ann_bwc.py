@@ -12,14 +12,19 @@ layout or bump ANN_FORMAT_VERSION with a migration and a NEW fixture.
 
 from __future__ import annotations
 
+import importlib.util
 import json
 import os
 import shutil
 
+import numpy as np
+import pyarrow.parquet as papq
 import pytest
 
+from opensearch_jvector_spark.operators.quantize import QUANTIZERS
 from opensearch_jvector_spark.operators.similarity import (
     ANN_FORMAT_VERSION,
+    ivf_build,
     ivf_query,
     ivf_query_local,
     read_index_manifest,
@@ -84,3 +89,38 @@ def test_future_format_version_is_refused(spark, bwc):
     sim._COARSE_CACHE.pop(idx)
     with pytest.raises(ValueError, match="format_version"):
         ivf_query(spark, idx, exp["query_vec"], 3, n_probe=2).collect()
+
+
+def _fixture_maker():
+    spec = importlib.util.spec_from_file_location(
+        "make_ann_bwc_fixture",
+        os.path.join(os.path.dirname(FIXTURE), "make_ann_bwc_fixture.py"),
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _codes_by_id(idx):
+    cols = ["vec_id"] + [c for q in QUANTIZERS.values()
+                         for c in q.column_names]
+    cells = os.path.join(idx, "cells")
+    t = papq.read_table(cells, columns=cols).sort_by("vec_id")
+    return t.to_pydict()
+
+
+def test_rebuild_encodes_identically(spark, tmp_path):
+    """Today's ivf_build, given the fixture's vectors and options,
+    writes the committed fixture's code columns row for row, and trains
+    the same PQ/BQ/MSQ states: the encoders kept the v1 contract."""
+    maker = _fixture_maker()
+    idx = str(tmp_path / "rebuilt")
+    df = spark.createDataFrame(
+        maker.vectors(), "vec_id long, embedding array<double>"
+    )
+    ivf_build(df, idx, **maker.BUILD_ARGS)
+    assert _codes_by_id(idx) == _codes_by_id(os.path.join(FIXTURE, "index"))
+    for q in QUANTIZERS.values():
+        if q.load:
+            want = q.load(os.path.join(FIXTURE, "index"))
+            assert np.array_equal(q.load(idx), want), q.name

@@ -4,20 +4,29 @@ exact rerank, 64x compression through the approximate scan."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import numpy as np
 import pytest
+from pyarrow.parquet import read_table as pq_read
 from pyspark.sql import functions as F
 
 from opensearch_jvector_spark.operators.quantize import (
+    QUANTIZERS,
     bq_encode,
     bq_hamming,
     bq_train,
     load_bq,
+    msq_encode,
+    pq_encode,
+    sq_encode,
 )
 from opensearch_jvector_spark.operators.similarity import (
     ivf_append,
     ivf_build,
     ivf_query,
+    topk_bruteforce,
 )
 
 SF01 = "/root/testdata/sf0.01/embeddings.parquet"
@@ -126,14 +135,68 @@ def test_bq_rejects_non_cosine_and_unbuilt(spark, tmp_path):
         ivf_query(spark, d2, _qvec(spark), k=5, use_bq=True)
 
 
-def test_ivf_append_encodes_bq_for_new_vectors(spark, tmp_path):
+#: quantizer -> (its ivf_build options, the quantize.py encoder of a
+#: vector matrix with the loaded trained state, as stored columns)
+APPEND_CASES = {
+    "pq": ({"pq_m": 8}, lambda M, st: {"code": pq_encode(M, st)}),
+    "sq": ({"sq": True}, lambda M, st: dict(zip(("sq_code", "sq_scale"),
+                                                sq_encode(M)))),
+    "bq": ({"bq": True}, lambda M, st: {"bq_code": bq_encode(M, st)}),
+    "msq": ({"msq_bits": 2}, lambda M, st: {"msq_code": msq_encode(M, st)}),
+}
+
+
+@pytest.mark.parametrize("name", list(APPEND_CASES))
+def test_ivf_append_encodes_new_vectors(spark, tmp_path, name):
+    """Appended rows are encoded with the index's EXISTING trained
+    state, and the first pass at full budget over base + appended rows
+    ranks like brute force."""
+    opts, encoder = APPEND_CASES[name]
     d = str(tmp_path / "idx")
     base = _emb(spark).filter(F.col("vec_id") < 400)
     extra = _emb(spark).filter(F.col("vec_id") >= 400)
-    ivf_build(base, d, n_centroids=8, kmeans_iters=1, bq=True)
+    ivf_build(base, d, n_centroids=8, kmeans_iters=1, **opts)
     ivf_append(spark, d, extra)
     q = _qvec(spark, vid=450)
     got = ivf_query(
-        spark, d, q, k=5, n_probe=8, use_bq=True, overquery=100
+        spark, d, q, k=10, n_probe=8, overquery=100, **{f"use_{name}": True}
     ).collect()
-    assert got[0]["vec_id"] == 450  # appended vector found via bq path
+    exact = topk_bruteforce(_emb(spark), q, 10, score_name="cos").collect()
+    assert [(r["vec_id"], r["cos"]) for r in got] == [
+        (r["vec_id"], r["cos"]) for r in exact
+    ]
+
+    stored = pq_read(os.path.join(d, "cells")).to_pandas()
+    stored = stored[stored["vec_id"] >= 400].sort_values("vec_id")
+    M = np.array([np.asarray(v, dtype=np.float64) for v in stored["v"]])
+    state = QUANTIZERS[name].load(d) if QUANTIZERS[name].load else None
+    for col, want in encoder(M, state).items():
+        want = np.asarray(want)
+        if want.dtype == np.float64:
+            assert np.array_equal(stored[col].to_numpy(), want), col
+        else:
+            assert list(stored[col]) == [c.tobytes() for c in want], col
+
+
+@pytest.mark.parametrize("name", ["pq", "bq", "msq"])
+def test_ivf_append_refuses_missing_trained_state(spark, tmp_path, name):
+    """Cells that carry a quantizer's codes but an index dir that lost
+    its trained state: ``ivf_append`` fails on the driver, naming the
+    missing state, before any Spark job runs."""
+    opts = APPEND_CASES[name][0]
+    d = str(tmp_path / "idx")
+    ivf_build(_emb(spark).filter(F.col("vec_id") < 400), d, n_centroids=4,
+              **opts)
+    shutil.rmtree(os.path.join(d, name))
+    extra = _emb(spark).filter(F.col("vec_id") >= 400)
+    sc = spark.sparkContext
+    sc.setJobGroup("missing-state", "ivf_append with a missing state")
+    try:
+        missing = QUANTIZERS[name].state_name
+        with pytest.raises(ValueError, match=f"no {missing}"):
+            ivf_append(spark, d, extra)
+        assert sc.statusTracker().getJobIdsForGroup("missing-state") == []
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)

@@ -24,6 +24,7 @@ from opensearch_jvector_spark.operators.quantize import (
 from opensearch_jvector_spark.operators.similarity import (
     ivf_build,
     ivf_query,
+    ivf_query_batch,
 )
 
 SF01 = "/root/testdata/sf0.01/embeddings.parquet"
@@ -147,6 +148,10 @@ def test_msq_requires_build_and_exclusive_flags(spark, tmp_path):
     ivf_build(emb, d, n_centroids=4, kmeans_iters=0)
     with pytest.raises(ValueError, match="without msq_bits"):
         ivf_query(spark, d, q, 5, use_msq=True).collect()
+    with pytest.raises(ValueError, match="without sq"):
+        ivf_query(spark, d, q, 5, use_sq=True).collect()
+    with pytest.raises(ValueError, match="without sq"):
+        ivf_query_batch(spark, d, [("q", q)], 5, use_sq=True).collect()
     with pytest.raises(ValueError, match="choose one"):
         ivf_query(spark, d, q, 5, use_msq=True, use_sq=True).collect()
     with pytest.raises(ValueError, match="cosine only"):

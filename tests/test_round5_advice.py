@@ -10,6 +10,8 @@
 3. Legacy stream batch tags: a checkpoint that published a batch under
    the pre-round-5 ``stream-{batch_id}`` spelling must not be
    double-appended when replayed under the checkpoint-scoped tag.
+4. The merge fast path asserts the block tiling invariant it rebases
+   offsets on, instead of silently mis-slicing a malformed row.
 """
 
 from __future__ import annotations
@@ -135,7 +137,7 @@ def test_pq_sample_hash_unbiased_in_ceil_window(spark):
     )
     n = e.count()
     assert 400 <= n < 800  # the degenerate window for pq_sample=400
-    sample = _pq_training_sample(e, 400, "hash")
+    sample = _pq_training_sample(e, 400)
     kept = (
         e.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(2)) == 0)
         .orderBy("vec_id").limit(400)
@@ -199,3 +201,27 @@ def test_append_index_legacy_tag_skips(spark, tmp_path):
         legacy_tags=("stream-3",),
     )
     assert s2["n_docs"] == n_docs  # no double count
+
+
+# ------------------------------------------ merge block tiling invariant
+
+
+def _merge_row(first_doc_off: int) -> dict:
+    return {
+        "term": "t", "chunk_id": 0, "term_bucket": 0, "seg_group": 0,
+        "sub": 0, "df": 2, "doc_bytes": b"\x00" * 8, "tf_bytes": b"\x00" * 4,
+        "block_first": [0, 5], "block_last": [4, 9], "block_count": [1, 1],
+        "block_doc_off": [first_doc_off, 5], "block_tf_off": [0, 2],
+        "block_max_tf": [1, 1], "block_min_dl": [1, 1],
+    }
+
+
+def test_merge_fast_path_asserts_block_tiling():
+    import pandas as pd
+
+    from opensearch_jvector_spark.operators.merge import _merge_batch
+
+    out = _merge_batch(pd.DataFrame([_merge_row(0)]), cap=1 << 20)
+    assert list(out["block_doc_off"][0]) == [0, 5]
+    with pytest.raises(AssertionError, match="tiling"):
+        _merge_batch(pd.DataFrame([_merge_row(2)]), cap=1 << 20)

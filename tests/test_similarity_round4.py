@@ -331,8 +331,14 @@ def test_pq_hash_sample_beats_first_n_on_adversarial_order(spark):
     )
     e = spark.createDataFrame(pdf)
 
-    def distortion(mode):
-        sample = _pq_training_sample(e, 256, mode)
+    # the first-N baseline: the lowest 256 ids (round 3's rule)
+    first_n = np.array(
+        [r["v"] for r in e.filter(F.col("vec_id") < 256)
+         .orderBy("vec_id").collect()],
+        dtype=np.float64,
+    )
+
+    def distortion(sample):
         cb = pq_train(sample, m=4, n_codes=16)
         codes = pq_encode(X, cb)
         dsub = dim // 4
@@ -342,12 +348,13 @@ def test_pq_hash_sample_beats_first_n_on_adversarial_order(spark):
         assert rec.shape == X.shape and dsub * 4 == dim
         return float(((X - rec) ** 2).mean())
 
-    d_first, d_hash = distortion("first"), distortion("hash")
+    d_first = distortion(first_n)
+    d_hash = distortion(_pq_training_sample(e, 256))
     assert d_hash < d_first * 0.5, (d_first, d_hash)
 
     # determinism: the hash sample is a pure function of ids
-    s1 = _pq_training_sample(e, 256, "hash")
-    s2 = _pq_training_sample(e.repartition(7), 256, "hash")
+    s1 = _pq_training_sample(e, 256)
+    s2 = _pq_training_sample(e.repartition(7), 256)
     assert np.array_equal(s1, s2)
 
 
