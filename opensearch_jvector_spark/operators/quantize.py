@@ -324,44 +324,29 @@ def proxy_from_dots(
     raise ValueError(f"no quantized proxy for space {space!r}")
 
 
-def _codes(col, dtype, width: int) -> np.ndarray:
-    """(rows, width) code matrix of a binary code column."""
-    return np.frombuffer(b"".join(col.to_numpy()), dtype=dtype).reshape(
-        len(col), width
-    )
-
-
 def _rows(codes: np.ndarray) -> list:
     return [c.tobytes() for c in codes]
 
 
-def _dot_proxy(grp, dots: np.ndarray, qn: np.ndarray, space: str):
-    norms = grp["norm"].to_numpy(dtype=np.float64)
-    return proxy_from_dots(dots, norms[:, None], qn[None, :], space)
+def _dot_proxy(cols, dots: np.ndarray, qn: np.ndarray, space: str):
+    return proxy_from_dots(dots, cols["norm"][:, None], qn[None, :], space)
 
 
-def _pq_proxy(grp, T, qn, space):
-    return _dot_proxy(
-        grp, adc_scores(_codes(grp["code"], np.uint8, T.shape[1]), T), qn,
-        space,
-    )
+def _pq_proxy(cols, T, qn, space):
+    return _dot_proxy(cols, adc_scores(cols["code"], T), qn, space)
 
 
-def _sq_proxy(grp, Qs, qn, space):
-    dots = sq_scores(
-        _codes(grp["sq_code"], np.int8, Qs.shape[1]),
-        grp["sq_scale"].to_numpy(dtype=np.float64), Qs,
-    )
-    return _dot_proxy(grp, dots, qn, space)
+def _sq_proxy(cols, Qs, qn, space):
+    dots = sq_scores(cols["sq_code"].view(np.int8), cols["sq_scale"], Qs)
+    return _dot_proxy(cols, dots, qn, space)
 
 
-def _hamming_proxy(col, qcodes: np.ndarray) -> np.ndarray:
+def _hamming_proxy(codes: np.ndarray, qcodes: np.ndarray) -> np.ndarray:
     # fewer differing threshold bits = closer angle; negated for the
     # shared desc ranking (the exact rerank restores true order)
-    C = _codes(col, np.uint8, qcodes.shape[1])
-    return -np.stack([bq_hamming(C, qc) for qc in qcodes], axis=1).astype(
-        np.float64
-    )
+    return -np.stack(
+        [bq_hamming(codes, qc) for qc in qcodes], axis=1
+    ).astype(np.float64)
 
 
 def _sq_encode_cols(M, _state) -> dict:
@@ -377,11 +362,13 @@ class Quantizer:
 
     ``encode(M, state)`` maps a (b, d) vector matrix to its cell code
     columns; ``operand(state, Q)`` is the driver-side per-query operand
-    (row i for query i); ``proxy(cell_group, operand_rows, qnorms,
-    space)`` is the (rows, queries) first-pass ranking proxy, higher =
-    closer, identical codes always scoring identically. ``train``,
-    ``save`` and ``load`` are None for a quantizer without trained
-    state (SQ)."""
+    (row i for query i); ``proxy(cols, operand_rows, qnorms, space)``
+    is the (rows, queries) first-pass ranking proxy, higher = closer,
+    identical codes always scoring identically. ``cols`` maps each
+    ``scan`` column to numpy: doubles as float64, a binary code column
+    as its (rows, width) uint8 matrix — the one form both transports
+    decode to. ``train``, ``save`` and ``load`` are None for a
+    quantizer without trained state (SQ)."""
 
     name: str
     option: str  # the ivf_build option that turns it on
@@ -434,8 +421,8 @@ QUANTIZERS = {
             "bq", "bq", "bq_code binary", "bq_code binary", ("cosine",),
             encode=lambda M, th: {"bq_code": _rows(bq_encode(M, th))},
             operand=lambda th, Q: bq_encode(Q, th),
-            proxy=lambda grp, qc, qn, space: _hamming_proxy(
-                grp["bq_code"], qc
+            proxy=lambda cols, qc, qn, space: _hamming_proxy(
+                cols["bq_code"], qc
             ),
             train=lambda s, o: bq_train(s),
             save=save_bq, load=load_bq, state_name="bq thresholds",
@@ -445,8 +432,8 @@ QUANTIZERS = {
             ("cosine",),
             encode=lambda M, th: {"msq_code": _rows(msq_encode(M, th))},
             operand=lambda th, Q: msq_encode(Q, th),
-            proxy=lambda grp, qc, qn, space: _hamming_proxy(
-                grp["msq_code"], qc
+            proxy=lambda cols, qc, qn, space: _hamming_proxy(
+                cols["msq_code"], qc
             ),
             train=lambda s, o: msq_train(s, o["msq_bits"]),
             save=save_msq, load=load_msq, state_name="msq threshold planes",

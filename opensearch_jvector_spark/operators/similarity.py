@@ -26,6 +26,8 @@ Two execution tiers, both float64:
 from __future__ import annotations
 
 import os
+import threading
+from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 import pandas as pd
@@ -608,10 +610,12 @@ def _pq_training_sample(e: DataFrame, pq_sample: int) -> np.ndarray:
 
 class _LRUBytes:
     """Tiny byte-bounded LRU: eviction by least-recent access when the
-    summed entry sizes exceed the budget. Single-threaded driver use
-    (matches the rest of the local fast path). Bounds every driver-side
-    cache in this module so a long-lived multi-index driver cannot grow
-    without limit (round-4 verdict item)."""
+    summed entry sizes exceed the budget. One lock guards every access,
+    so driver threads may share it; cached values are never mutated
+    after ``put`` (a change puts a new value), so a reader keeps a
+    consistent snapshot. Bounds every driver-side cache in this module
+    so a long-lived multi-index driver cannot grow without limit
+    (round-4 verdict item)."""
 
     def __init__(self, max_bytes: int):
         from collections import OrderedDict
@@ -619,33 +623,38 @@ class _LRUBytes:
         self.max_bytes = max_bytes
         self._d: "OrderedDict" = OrderedDict()
         self._sizes: dict = {}
+        self._lock = threading.Lock()
         self.bytes = 0
 
     def get(self, key):
-        if key not in self._d:
-            return None
-        self._d.move_to_end(key)
-        return self._d[key]
+        with self._lock:
+            if key not in self._d:
+                return None
+            self._d.move_to_end(key)
+            return self._d[key]
 
     def put(self, key, value, nbytes: int) -> None:
-        if key in self._d:
-            self.bytes -= self._sizes[key]
-            del self._d[key]
-        self._d[key] = value
-        self._sizes[key] = nbytes
-        self.bytes += nbytes
-        while self.bytes > self.max_bytes and len(self._d) > 1:
-            old, _ = self._d.popitem(last=False)
-            self.bytes -= self._sizes.pop(old)
+        with self._lock:
+            if key in self._d:
+                self.bytes -= self._sizes[key]
+                del self._d[key]
+            self._d[key] = value
+            self._sizes[key] = nbytes
+            self.bytes += nbytes
+            while self.bytes > self.max_bytes and len(self._d) > 1:
+                old, _ = self._d.popitem(last=False)
+                self.bytes -= self._sizes.pop(old)
 
     def pop(self, key, default=None):
-        if key in self._d:
-            self.bytes -= self._sizes.pop(key)
-            return self._d.pop(key)
-        return default
+        with self._lock:
+            if key in self._d:
+                self.bytes -= self._sizes.pop(key)
+                return self._d.pop(key)
+            return default
 
     def __len__(self):
-        return len(self._d)
+        with self._lock:
+            return len(self._d)
 
 
 #: (index_dir) -> (file signature, cells, C) — the centroid table is
@@ -734,35 +743,60 @@ def _probe_cells(
     n_coarse_probe: int | None = None,
     metrics: dict | None = None,
 ) -> list[int]:
-    """Driver-side probe decision; the Spark job then scans only the
-    chosen cell=... directories. Every query path enters here, so this
-    is also where an interrupted compaction swap gets rolled
-    forward/back before any cell is read (idempotent listdir when
-    clean).
+    """Driver-side probe decision for one query: the batch of one of
+    ``_probe_batch``."""
+    return _probe_batch(
+        index_dir, np.asarray(qv)[None, :], n_probe, space, n_coarse_probe,
+        metrics,
+    )[0]
 
-    Indexes built with ``coarse=True`` route through the TWO-LEVEL
-    probe automatically: score the tiny coarse table, open only the
-    winning groups' fine-centroid files, score those — O(n_groups +
-    probed_groups * group_size) ~ O(sqrt(n_cells)) centroid work per
-    query instead of a full-centroid scan (the scale analog of the
-    reference's hierarchy option, JVectorDiskANNMethod.java:37-89 /
-    ``advanced.hierarchy_enabled``: keep per-query probe work sublinear
-    in index size). Flat indexes keep the exact legacy behavior."""
+
+def _probe_batch(
+    index_dir: str,
+    Q: np.ndarray,
+    n_probe: int,
+    space: str,
+    n_coarse_probe: int | None = None,
+    metrics: dict | None = None,
+) -> list[list[int]]:
+    """Driver-side probe decision for every row of ``Q``; the engine
+    then reads only the chosen cell=... directories. Every query path
+    enters here, so this is also where an interrupted compaction swap
+    gets rolled forward/back before any cell is read (idempotent
+    listdir when clean) — once per batch, like the centroid read.
+    Indexes built with ``coarse=True`` take the TWO-LEVEL probe
+    (``_probe_cells_two_level``: ~sqrt(n_cells) centroids scored per
+    query, the analog of the reference's hierarchy option,
+    JVectorDiskANNMethod.java:37-89)."""
     cells_dir = os.path.join(index_dir, "cells")
     if os.path.isdir(cells_dir):
         _recover_cell_swaps(cells_dir)
     if _has_coarse(index_dir):
-        return _probe_cells_two_level(
-            index_dir, qv, n_probe, space, n_coarse_probe, metrics
-        )
+        return [
+            _probe_cells_two_level(
+                index_dir, qv, n_probe, space, n_coarse_probe, metrics
+            )
+            for qv in Q
+        ]
     cells, C = _load_centroids(index_dir)
     if metrics is not None:
         metrics["centroids_scored"] = (
-            metrics.get("centroids_scored", 0) + len(cells)
+            metrics.get("centroids_scored", 0) + len(cells) * len(Q)
         )
-    sims = _np_space_scores(qv[None, :], C, space)[0]
-    order = np.lexsort((cells, -sims))[:n_probe]
-    return sorted(int(cells[i]) for i in order)
+    return _probe_rows(cells, C, Q, n_probe, space)
+
+
+def _probe_rows(cells, C, Q, n_probe: int, space: str) -> list[list[int]]:
+    """Each query's ``n_probe`` best cells of a flat centroid table
+    (ties to the lower cell id), scored as a one-row
+    ``_np_space_scores`` call so a query's cells are bitwise the same
+    alone and inside any batch."""
+    out = []
+    for qv in Q:
+        sims = _np_space_scores(qv[None, :], C, space)[0]
+        order = np.lexsort((cells, -sims))[:n_probe]
+        out.append(sorted(int(cells[i]) for i in order))
+    return out
 
 
 # ------------------------------------------- two-level (coarse) probe
@@ -1301,6 +1335,33 @@ def _cut(S: np.ndarray, k: int, min_score: float | None) -> np.ndarray:
     return S >= np.partition(S, len(S) - k, axis=0)[len(S) - k]
 
 
+def _cell_pass(
+    cols: dict, idxs: np.ndarray, Q: np.ndarray, qn: np.ndarray, space: str,
+    keep: int, min_score: float | None, quantizer=None, enc=None,
+) -> tuple:
+    """The per-cell kernel of both transports: exact scores of ``cols``
+    (v, norm) against the queries ``idxs``, or the ``quantizer``
+    entry's proxy from its operands ``enc``, then the tie-safe cut.
+    Returns the surviving (rows, query positions, scores)."""
+    if quantizer is None:
+        S = _np_exact_batch(cols["v"], cols["norm"], Q[idxs], qn[idxs], space)
+    else:
+        S = quantizer.proxy(cols, enc[idxs], qn[idxs], space)
+    r, c = np.nonzero(_cut(S, keep, min_score))
+    return r, idxs[c], S[r, c]
+
+
+def _np_col(col: pd.Series) -> np.ndarray:
+    """A pandas cell-scan column in the quantizer proxies' numpy form:
+    fixed-width binary codes as a (rows, width) uint8 matrix, numbers
+    as float64."""
+    if col.dtype == object:
+        return np.frombuffer(b"".join(col), dtype=np.uint8).reshape(
+            len(col), -1
+        )
+    return col.to_numpy(dtype=np.float64)
+
+
 def _scan_scores(
     scan: DataFrame, qids: list, Q: np.ndarray, space: str, out: str,
     keep: int, min_score: float | None = None, cell_to_q: dict | None = None,
@@ -1308,10 +1369,8 @@ def _scan_scores(
 ) -> DataFrame:
     """(query_id, vec_id, <out>) for every scanned row against the
     queries that probed its cell (every query when ``cell_to_q`` is
-    None): exact scores, or the ``quantizer`` entry's first-pass proxy
-    from its per-query operands ``enc``. One vectorized kernel per cell
-    group of each Arrow batch, and the tie-safe ``keep``/``min_score``
-    cut per query bounds what reaches the shuffle."""
+    None): ``_cell_pass`` per cell group of each Arrow batch, whose
+    cut bounds what reaches the shuffle."""
     qn = np.linalg.norm(Q, axis=1)
     bc = scan.sparkSession.sparkContext.broadcast({
         "Q": Q, "qids": np.asarray(qids, dtype=object), "qn": qn,
@@ -1335,18 +1394,17 @@ def _scan_scores(
                 if idxs is None or not len(grp):
                     continue
                 if quantizer is None:
-                    S = _np_exact_batch(
-                        _stack_batch(grp["v"], Qm.shape[1]),
-                        grp["norm"].to_numpy(dtype=np.float64),
-                        Qm[idxs], qn[idxs], space,
-                    )
+                    cols = {"v": _stack_batch(grp["v"], Qm.shape[1]),
+                            "norm": grp["norm"].to_numpy(dtype=np.float64)}
                 else:
-                    S = quantizer.proxy(grp, enc[idxs], qn[idxs], space)
-                r, c = np.nonzero(_cut(S, keep, min_score))
+                    cols = {n: _np_col(grp[n]) for n in quantizer.scan_names}
+                r, qpos, sc = _cell_pass(
+                    cols, idxs, Qm, qn, space, keep, min_score, quantizer, enc
+                )
                 frames.append(pd.DataFrame({
-                    "query_id": ids[idxs[c]],
+                    "query_id": ids[qpos],
                     "vec_id": grp["vec_id"].to_numpy()[r],
-                    out: S[r, c],
+                    out: sc,
                 }))
             if frames:
                 yield pd.concat(frames, ignore_index=True)
@@ -1391,9 +1449,10 @@ def _ivf_search(
     filtered_exact_threshold: int,
     approximate_threshold: int | None,
     min_score: float | None = None,
-) -> DataFrame:
-    """The one Spark ANN query engine behind ``ivf_query``,
-    ``ivf_query_radial`` and ``ivf_query_batch``:
+    max_bytes: int | None = None,
+):
+    """The one ANN query engine behind ``ivf_query``,
+    ``ivf_query_radial``, ``ivf_query_batch`` and ``ivf_query_local``:
     (query_id, vec_id, cos|score, rank) for the query matrix ``Q``.
 
     Decisions, in order:
@@ -1404,51 +1463,63 @@ def _ivf_search(
       * an index of at most ``approximate_threshold`` rows
         exact-scores the whole index (KNNSettings.java:70);
       * otherwise each query probes its ``n_probe`` nearest cells and
-        each cell group's Arrow batches score only the queries that
-        probed it — exactly, or with ``quantizer`` a first pass over
-        the code columns alone keeps each query's best
-        ``rescore_first_pass_k`` candidates and one vec_id-pushdown
-        read reranks their union exactly (JVectorReader.search's
-        approximate-then-exact shape, JVectorReader.java:131-212).
+        each cell scores only the queries that probed it — exactly, or
+        with ``quantizer`` a first pass over the code columns alone
+        keeps each query's best ``rescore_first_pass_k`` candidates
+        and an exact rerank scores only those (JVectorReader.search's
+        approximate-then-exact shape, JVectorReader.java:131-212);
+      * the transport: in process (``_local_search``) unless only
+        Spark can answer (``_spark_only``); ``metrics["transport"]``
+        and ``metrics["transport_reason"]`` record it. Both run
+        ``_cell_pass`` per cell, rank by (score desc, vec_id asc) and
+        round like ``F.round(score, 6)``, so their rows are bitwise
+        equal.
 
-    Every exact score is ``_np_exact_batch``; ``min_score`` switches
-    the exact forms from top-k to radial. Tombstones mask every form;
-    ``filter_ids`` masks before any budget."""
+    ``min_score`` switches the exact forms from top-k to radial.
+    Tombstones mask every form; ``filter_ids`` masks before any
+    budget. ``spark=None`` returns the local pandas frame and raises
+    ValueError where only Spark could answer."""
     score_name = "cos" if space == "cosine" else "score"
     empty = f"query_id string, vec_id long, {score_name} double, rank int"
     note = metrics if metrics is not None else {}
-    deny = _deny_info(index_dir)  # tombstoned ids never match (liveDocs)
-    full = "vec_id long, v array<double>, norm double"
     small = _allow_ids_if_small(filter_ids, filtered_exact_threshold)
     n_small = None
     if small is None:
         n_small = _index_smaller_than(index_dir, approximate_threshold)
+    cell_to_q = None  # None: every query scores every cell
     if small is not None or n_small is not None:
         if small is not None:
             note.update(filtered_exact=True, filter_cardinality=len(small))
+            filter_ids = small
         else:
             note.update(approximate_bypassed=True, index_rows=n_small)
-        paths = _all_cell_paths(index_dir)
-        if not paths or small == []:
-            return spark.createDataFrame([], empty)
-        scan = spark.read.schema(full).parquet(*paths)
-        if small is not None:
-            scan = scan.filter(F.col("vec_id").isin(small))
-        else:
-            scan = _apply_allow(scan, filter_ids)
-        scored = _scan_scores(
-            _apply_deny(scan, deny), qids, Q, space, score_name, k, min_score
+        quantizer = None
+        paths = _all_cell_paths(index_dir) if small != [] else []
+    else:
+        cell_to_q = {}
+        probes = _probe_batch(index_dir, Q, n_probe, space, metrics=metrics)
+        for i, cells in enumerate(probes):
+            for c in cells:
+                cell_to_q.setdefault(c, []).append(i)
+        paths = _cell_paths(index_dir, sorted(cell_to_q))
+        cell_to_q = {c: np.asarray(v) for c, v in cell_to_q.items()}
+    deny = _deny_info(index_dir)  # tombstoned ids never match (liveDocs)
+    reason = _spark_only(
+        paths, Q.shape[1], filter_ids, deny,
+        LOCAL_IVF_MAX_BYTES if max_bytes is None else max_bytes,
+    )
+    if reason is None:
+        note["transport"] = "local"
+        pdf = _local_search(
+            index_dir, paths, cell_to_q, qids, Q, k, space, quantizer,
+            overquery, min_score, filter_ids, score_name, metrics,
         )
-        return _rank_per_query(scored, k, score_name, min_score)
-
-    cell_to_q: dict[int, list[int]] = {}
-    for i, q in enumerate(Q):
-        for c in _probe_cells(index_dir, q, n_probe, space, metrics=metrics):
-            cell_to_q.setdefault(c, []).append(i)
-    paths = _cell_paths(index_dir, sorted(cell_to_q))
+        return pdf if spark is None else spark.createDataFrame(pdf, empty)
+    note.update(transport="spark", transport_reason=reason)
+    if spark is None:
+        raise ValueError(f"{reason}; use the distributed ivf_query")
     if not paths:
         return spark.createDataFrame([], empty)
-    cell_to_q = {c: np.asarray(v) for c, v in cell_to_q.items()}
 
     def probed(cols: str) -> DataFrame:
         scan = (
@@ -1480,26 +1551,175 @@ def _ivf_search(
     if metrics is not None:
         metrics.update(_pq_bytes_metrics(
             paths, len({r["vec_id"] for r in cand_rows}), q.scan_names,
+            len(qids),
         ))
-        metrics["n_queries"] = len(qids)
-        # the batch reads the code columns ONCE for all queries and
-        # reranks the (overlapping) candidate union once — the fair
-        # comparison with single-query cost is per-query AMORTIZED
-        # bytes: N single queries each pay the full approx pass
-        metrics["amortized_bytes_per_query"] = int(
-            metrics["bytes_scanned"] / max(1, len(qids))
-        )
-        metrics["amortized_compression_ratio"] = round(
-            metrics["unquantized_bytes"]
-            / max(1, metrics["amortized_bytes_per_query"]),
-            2,
-        )
     if not cand_rows:
         return spark.createDataFrame([], empty)
     return _rank_per_query(
         _rerank(spark, paths, qids, Q, space, score_name, cand_rows),
         k, score_name,
     )
+
+
+def _spark_only(
+    paths: list[str], dim: int, filter_ids, deny, max_bytes: int
+) -> str | None:
+    """Why only Spark can answer, or None when the driver can: a
+    DataFrame allow-list (small ones arrive here as ids), tombstones
+    too many to hold as ids, or more than ``max_bytes`` of vectors in
+    the cells the query reads (counted from footers, before any
+    read)."""
+    if isinstance(filter_ids, DataFrame):
+        return "a DataFrame filter above filtered_exact_threshold"
+    if deny is not None and deny[1] is None:
+        return (
+            f"{deny[0]} tombstones exceed the driver-path id budget "
+            f"({_TOMB_ISIN_MAX})"
+        )
+    nbytes = 8 * dim * sum(_cell_footers(p)[0] for p in paths)
+    if nbytes > max_bytes:
+        return f"probed cells hold {nbytes} vector bytes > max_bytes={max_bytes}"
+    return None
+
+
+_E6 = Decimal("1e-6")
+
+
+def _round6(x: np.ndarray) -> np.ndarray:
+    """``F.round(x, 6)`` in numpy: HALF_UP on the double's decimal form
+    (``BigDecimal.valueOf``), where ``np.round`` rounds x * 1e6
+    half-even. Values near a half, or too large for x * 1e6 to keep
+    its fraction, are rounded in decimal."""
+    x = np.asarray(x, dtype=np.float64)
+    out = x.copy()
+    part = np.abs(x) < 2.0**52
+    out[part] = np.round(x[part], 6)
+    y = x[part] * 1e6
+    odd = (np.abs(np.abs(y - np.trunc(y)) - 0.5) < 1e-3) | (np.abs(y) >= 1e9)
+    for i in np.flatnonzero(part)[odd]:
+        out[i] = float(
+            Decimal(repr(float(x[i]))).quantize(_E6, ROUND_HALF_UP)
+        )
+    return out
+
+
+def _top_rows(
+    qi: np.ndarray, vid: np.ndarray, s: np.ndarray, n: int | None, nq: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Indices of each query's best ``n`` rows (every row when None) in
+    (query, score desc, vec_id asc) order, with their 1-based ranks —
+    ``_rank_per_query`` in numpy. A tie-safe partition cut per query
+    runs first, so only its survivors are sorted."""
+    idx = np.arange(len(s))
+    if n is not None:
+        if n < 1:
+            return idx[:0], idx[:0]
+        # uint16 keys take numpy's O(n) radix sort
+        by_q = np.argsort(qi.astype(np.uint16) if nq <= 1 << 16 else qi,
+                          kind="stable")
+        bounds = np.searchsorted(qi[by_q], np.arange(nq + 1))
+        parts = []
+        for a, b in zip(bounds[:-1], bounds[1:]):
+            seg = by_q[a:b]
+            if len(seg) > n:
+                ss = s[seg]
+                seg = seg[ss >= np.partition(ss, len(seg) - n)[len(seg) - n]]
+            parts.append(seg)
+        idx = np.concatenate(parts) if parts else idx[:0]
+    order = idx[np.lexsort((vid[idx], -s[idx], qi[idx]))]
+    qs = qi[order]
+    rank = np.arange(1, len(order) + 1) - np.searchsorted(qs, qs)
+    if n is not None:
+        order, rank = order[rank <= n], rank[rank <= n]
+    return order, rank
+
+
+#: (row, query) pairs per exact-rerank call — bounds the gathered
+#: (pairs, dim) temporaries; each pair scores the same in any chunk
+_RERANK_CHUNK = 8192
+
+
+def _local_search(
+    index_dir: str, paths: list[str], cell_to_q: dict | None, qids: list,
+    Q: np.ndarray, k: int, space: str, quantizer: tuple | None,
+    overquery: int | None, min_score: float | None, filter_ids,
+    score_name: str, metrics: dict | None,
+) -> pd.DataFrame:
+    """The in-process transport of ``_ivf_search``: the Spark kernels'
+    per-cell cut, proxy, budget and exact scorer over the cells' cached
+    numpy arrays (``_local_cells``), with no Spark job."""
+    q, state = quantizer if quantizer is not None else (None, None)
+    tomb_sig, _, tomb_ids = _tombstone_snapshot(index_dir)
+    loaded = _local_cells(
+        index_dir, [int(p.rsplit("=", 1)[1]) for p in paths], tomb_sig,
+        tomb_ids, q.scan_names if q else (),
+    )
+    allow = None
+    if filter_ids is not None:
+        allow = np.fromiter((int(x) for x in filter_ids), dtype=np.int64)
+    nq, qn = len(Q), np.linalg.norm(Q, axis=1)
+    keep = k if q is None else rescore_first_pass_k(k, Q.shape[1], overquery)
+    enc = q.operand(state, Q) if q else None
+    need = q.scan_names if q else ("v", "norm")
+    every = np.arange(nq)
+    # per surviving (row, query): query, vec_id, row in the probed
+    # cells' concatenation, first-pass or exact score
+    qi, vid, grow = ([np.empty(0, np.int64)] for _ in range(3))
+    s = [np.empty(0)]
+    offs, Vs, Ns = [0], [], []
+    for cell, live, _ in loaded:
+        if not len(live["vec_id"]):
+            continue
+        idxs = every if cell_to_q is None else cell_to_q[cell]
+        rows = None
+        if allow is not None:
+            rows = np.flatnonzero(np.isin(live["vec_id"], allow))
+        cols = {n: live[n] if rows is None else live[n][rows] for n in need}
+        ids = live["vec_id"] if rows is None else live["vec_id"][rows]
+        if len(ids):
+            r, qpos, sc = _cell_pass(
+                cols, idxs, Q, qn, space, keep, min_score, q, enc
+            )
+            qi.append(qpos)
+            vid.append(ids[r])
+            grow.append(offs[-1] + (r if rows is None else rows[r]))
+            s.append(sc)
+        Vs.append(live["v"])
+        Ns.append(live["norm"])
+        offs.append(offs[-1] + len(live["vec_id"]))
+    qi, vid, grow, s = (np.concatenate(a) for a in (qi, vid, grow, s))
+    if q is None:
+        order, rank = _top_rows(
+            qi, vid, s, k if min_score is None else None, nq
+        )
+    else:
+        order, _ = _top_rows(qi, vid, s, keep, nq)
+        qi, vid, grow = qi[order], vid[order], grow[order]
+        if metrics is not None:
+            metrics.update(_pq_bytes_metrics(
+                paths, len(np.unique(vid)), q.scan_names, len(qids)
+            ))
+        # the exact rerank: each candidate row gathered once, scored
+        # only for the queries that shortlisted it
+        u, inv = np.unique(grow, return_inverse=True)
+        cut = np.searchsorted(u, offs)
+        V, N = (np.concatenate([e] + [
+            x[u[a:b] - o] for x, a, b, o in zip(X, cut, cut[1:], offs)
+        ]) for X, e in ((Vs, np.empty((0, Q.shape[1]))), (Ns, np.empty(0))))
+        s = np.concatenate([np.empty(0)] + [
+            _np_exact_batch(
+                V, N, Q, qn, space,
+                pairs=(inv[i:i + _RERANK_CHUNK], qi[i:i + _RERANK_CHUNK]),
+            )
+            for i in range(0, len(inv), _RERANK_CHUNK)
+        ])
+        order, rank = _top_rows(qi, vid, s, k, nq)
+    return pd.DataFrame({
+        "query_id": np.asarray(qids, dtype=object)[qi[order]],
+        "vec_id": vid[order],
+        score_name: _round6(s[order]),
+        "rank": rank.astype(np.int32),
+    })
 
 
 def _rerank(
@@ -1631,7 +1851,15 @@ def ivf_query(
     disable). ``approximate_threshold`` (None = module default
     ``APPROXIMATE_THRESHOLD``; 0 disables): an index of at most this
     many rows is exact-scored whole — decided from parquet footers with
-    an early exit, so big indexes never pay a metadata sweep."""
+    an early exit, so big indexes never pay a metadata sweep.
+
+    Transport: the query runs in-process, with no Spark job before the
+    caller reads the result, when the cells it reads hold at most
+    ``LOCAL_IVF_MAX_BYTES`` of vectors, the tombstones fit a driver id
+    array and ``filter_ids`` is not a DataFrame above
+    ``filtered_exact_threshold``; otherwise it runs as Spark jobs. Both
+    give bitwise the same rows; ``metrics["transport"]`` says which
+    ran."""
     return _single(_ivf_search(
         spark, index_dir, ["q"], np.asarray([query_vec], dtype=np.float64),
         k, n_probe=n_probe, space=space,
@@ -1696,39 +1924,67 @@ def ivf_query_radial(
     ))
 
 
+#: cell directory -> (fast dir signature, rows, {column: uncompressed
+#: bytes}) summed over its parquet footers
+_FOOTER_CACHE = _LRUBytes(16 << 20)
+
+
+def _cell_footers(path: str) -> tuple[int, dict]:
+    """(rows, {column: uncompressed bytes}) of one cell directory, from
+    its parquet FOOTERS (no data pages read), cached under the fast
+    directory signature ``_local_cells`` uses."""
+    import pyarrow.parquet as papq
+
+    try:
+        sig = _cell_dir_sig(path)
+    except FileNotFoundError:  # swapped away since the listing
+        return 0, {}
+    hit = _FOOTER_CACHE.get(path)
+    if hit is not None and hit[0] == sig:
+        return hit[1], hit[2]
+    rows, cols = 0, {}
+    for base, _, files in os.walk(path):
+        for fn in files:
+            if not fn.endswith(".parquet"):
+                continue
+            md = papq.ParquetFile(os.path.join(base, fn)).metadata
+            rows += md.num_rows
+            for rg in range(md.num_row_groups):
+                g = md.row_group(rg)
+                for ci in range(g.num_columns):
+                    col = g.column(ci)
+                    name = col.path_in_schema.split(".")[0]
+                    cols[name] = cols.get(name, 0) + col.total_uncompressed_size
+    _FOOTER_CACHE.put(path, (sig, rows, cols), 64 * (2 + len(cols)))
+    return rows, cols
+
+
 def _pq_bytes_metrics(
-    paths: list[str], n_cand: int, approx_cols: tuple
+    paths: list[str], n_cand: int, approx_cols: tuple, n_queries: int
 ) -> dict:
     """Uncompressed bytes-through-the-scan accounting from parquet
     FOOTERS (no data pages read): the approximate pass reads only its
     code columns (+norm) of every probed row; the rerank reads full
     vectors of only the candidates. The reported ratio is the
     reference's compression win made visible (BENCH analog of
-    KNNCounter)."""
-    import pyarrow.parquet as papq
-
+    KNNCounter). A batch reads the code columns ONCE for all queries
+    and reranks the (overlapping) candidate union once, so the fair
+    comparison with single queries, which each pay the full approx
+    pass, is per-query AMORTIZED bytes."""
     col_bytes = {c: 0 for c in {*approx_cols, "norm", "v"}}
     rows = 0
     for p in paths:
-        for base, _, files in os.walk(p):
-            for fn in files:
-                if not fn.endswith(".parquet"):
-                    continue
-                md = papq.ParquetFile(os.path.join(base, fn)).metadata
-                rows += md.num_rows
-                for rg in range(md.num_row_groups):
-                    g = md.row_group(rg)
-                    for ci in range(g.num_columns):
-                        col = g.column(ci)
-                        name = col.path_in_schema.split(".")[0]
-                        if name in col_bytes:
-                            col_bytes[name] += col.total_uncompressed_size
+        n, cols = _cell_footers(p)
+        rows += n
+        for c in col_bytes:
+            col_bytes[c] += cols.get(c, 0)
     # exactly the columns the approximate pass reads (the BQ pass reads
     # only the packed bits — no norm column)
     approx_bytes = sum(col_bytes[c] for c in set(approx_cols))
     rerank_bytes = int(col_bytes["v"] * (n_cand / rows)) if rows else 0
     full_bytes = col_bytes["v"] + col_bytes["norm"]
     scanned = approx_bytes + rerank_bytes
+    amortized = int(scanned / max(1, n_queries))
     return {
         "probed_rows": rows,
         "approx_bytes": approx_bytes,
@@ -1736,6 +1992,9 @@ def _pq_bytes_metrics(
         "unquantized_bytes": full_bytes,
         "bytes_scanned": scanned,
         "compression_ratio": round(full_bytes / scanned, 2) if scanned else 0.0,
+        "n_queries": n_queries,
+        "amortized_bytes_per_query": amortized,
+        "amortized_compression_ratio": round(full_bytes / max(1, amortized), 2),
     }
 
 
@@ -1798,19 +2057,19 @@ def ivf_query_batch(
     """(query_id, vec_id, cos|score, rank) for a BATCH of
     (query_id, vector) pairs in ONE pruned scan (the bm25_topk_batch
     analog). The driver probes the centroid table for every query,
-    unions the probed cell directories, and each Arrow batch scores
-    ONLY the queries that probed its cell — one kernel per cell group
-    for ALL of that cell's queries.
+    unions the probed cells, and each cell scores ONLY the queries
+    that probed it — one kernel per cell for ALL of its queries, in
+    process or per Arrow batch of a Spark job.
 
     With ``use_pq`` / ``use_sq`` pass 1 reads ONLY code columns of the
     probed cells, each query keeps its best ``k * overquery``
-    candidates, and ONE second read reranks the union of candidates
-    against full vectors (vec_id pushdown). Per-query results are
+    candidates, and one exact rerank scores the union of candidates
+    against full vectors. Per-query results are
     identical to ``ivf_query`` (the same engine: same probe rule,
     proxy, budget, tie-safe cut and exact kernel). ``metrics``
-    receives the batch bytes-scanned accounting; ``filter_ids`` and
-    both exact-search thresholds act as in ``ivf_query``, for every
-    query of the batch."""
+    receives the batch bytes-scanned accounting; ``filter_ids``, both
+    exact-search thresholds and the transport rule act as in
+    ``ivf_query``, for every query of the batch."""
     return _ivf_search(
         spark, index_dir, [q[0] for q in queries],
         np.array([np.asarray(q[1], dtype=np.float64) for q in queries]),
@@ -1836,9 +2095,9 @@ LOCAL_IVF_MAX_BYTES = 512 << 20
 LOCAL_IVF_CACHE_MAX_BYTES = 4 << 30
 
 
-#: (index_dir, cell) -> {"sig": fast dir stat, "raw": (ids, M, norms),
-#: "tomb_sig": ..., "live": (ids, M, norms)} — probed-cell arrays,
-#: LRU-bounded by vector bytes
+#: (index_dir, cell) -> {"sig": fast dir stat, "raw": {column: array},
+#: "tomb_sig": ..., "live": {column: array}, "aux": {}} — probed-cell
+#: arrays, LRU-bounded by their bytes
 _LOCAL_IVF_CACHE = _LRUBytes(LOCAL_IVF_CACHE_MAX_BYTES)
 
 
@@ -1852,48 +2111,75 @@ def _cell_dir_sig(path: str) -> tuple:
     return (st.st_ino, st.st_mtime_ns, st.st_nlink)
 
 
-def _local_cells(index_dir: str, cells: list[int], tomb_sig=None,
-                 tomb_ids=None):
-    """Load (and LRU-cache) the probed cells' (ids, vectors, norms)
-    into driver numpy arrays via pyarrow — no Spark job. Cache key is
-    (index_dir, cell); the fast directory signature invalidates on
-    appends/rebuilds. Tombstone masking is applied ONCE per (cell,
-    tombstone-ledger version) and the masked view cached — per-query
-    cost is a dict hit, not an isin."""
+def _read_cols(path: str, names) -> dict:
+    """vec_id and ``names`` of one cell directory as numpy, straight
+    from Arrow's flat buffers: a vector column becomes a (rows, dim)
+    float64 matrix, a binary code column a (rows, width) uint8
+    matrix."""
+    import pyarrow as pa
     import pyarrow.parquet as papq
 
+    t = papq.read_table(path, columns=["vec_id", *names])
+    out = {}
+    for name in t.column_names:
+        a = t[name].combine_chunks()
+        n = len(a)
+        if pa.types.is_list(a.type):
+            flat = a.flatten().to_numpy(zero_copy_only=False)
+            out[name] = flat.reshape(n, len(flat) // n if n else 0)
+        elif pa.types.is_binary(a.type):  # fixed-width codes
+            w = len(a[0].as_py()) if n else 1
+            a = a.cast(pa.binary(w))  # raises on ragged widths
+            out[name] = np.frombuffer(a.buffers()[1], np.uint8)[
+                a.offset * w:(a.offset + n) * w
+            ].reshape(n, w)
+        else:
+            out[name] = a.to_numpy(zero_copy_only=False)
+    return out
+
+
+def _local_cells(index_dir: str, cells: list[int], tomb_sig=None,
+                 tomb_ids=None, columns=()) -> list[tuple]:
+    """[(cell, live columns, aux)] of the cells that exist: vec_id, v,
+    norm and the code ``columns`` as numpy, read with pyarrow and
+    LRU-cached per (index_dir, cell) under the fast directory
+    signature. Code columns load lazily into the same entry, charged
+    to it; tombstones mask once per ledger version. A change puts a
+    new entry, so concurrent readers keep consistent snapshots."""
     out = []
     for c in cells:
         p = os.path.join(index_dir, "cells", f"cell={c}")
         key = (index_dir, c)
-        entry = _LOCAL_IVF_CACHE.get(key)
         try:
             sig = _cell_dir_sig(p)
         except FileNotFoundError:
             _LOCAL_IVF_CACHE.pop(key)
             continue
+        entry = _LOCAL_IVF_CACHE.get(key)
         if entry is None or entry["sig"] != sig:
-            t = papq.read_table(p, columns=["vec_id", "v", "norm"])
-            ids = np.asarray(t["vec_id"].to_pylist(), dtype=np.int64)
-            M = np.array(t["v"].to_pylist(), dtype=np.float64)
-            norms = np.asarray(t["norm"].to_pylist(), dtype=np.float64)
-            entry = {
-                "sig": sig, "raw": (ids, M, norms),
-                "tomb_sig": None, "live": (ids, M, norms), "aux": {},
-            }
-            _LOCAL_IVF_CACHE.put(
-                key, entry, M.nbytes + ids.nbytes + norms.nbytes
-            )
-        if entry["tomb_sig"] != tomb_sig:
-            ids, M, norms = entry["raw"]
+            entry = {"sig": sig, "raw": _read_cols(p, ("v", "norm")),
+                     "tomb_sig": None, "live": None, "aux": {}}
+        raw = entry["raw"]
+        missing = [n for n in columns if n not in raw]
+        if missing:
+            extra = _read_cols(p, missing)
+            if np.array_equal(extra.pop("vec_id"), raw["vec_id"]):
+                raw = {**raw, **extra}
+            else:  # the directory changed between the two reads
+                raw = _read_cols(p, [*raw.keys() - {"vec_id"}, *missing])
+        if missing or entry["live"] is None or entry["tomb_sig"] != tomb_sig:
+            live = raw
             if tomb_ids is not None and len(tomb_ids):
-                live = ~np.isin(ids, tomb_ids)
-                entry["live"] = (ids[live], M[live], norms[live])
-            else:
-                entry["live"] = entry["raw"]
-            entry["tomb_sig"] = tomb_sig
-            entry["aux"] = {}  # per-space precomputations track live
-        out.append((*entry["live"], entry["aux"]))
+                keep = ~np.isin(raw["vec_id"], tomb_ids)
+                if not keep.all():
+                    live = {n: a[keep] for n, a in raw.items()}
+            entry = {"sig": sig, "raw": raw, "tomb_sig": tomb_sig,
+                     "live": live, "aux": {}}
+            nbytes = sum(a.nbytes for a in raw.values())
+            if live is not raw:
+                nbytes += sum(a.nbytes for a in live.values())
+            _LOCAL_IVF_CACHE.put(key, entry, nbytes)
+        out.append((c, entry["live"], entry["aux"]))
     return out
 
 
@@ -1934,63 +2220,32 @@ class LocalIvfSearcher:
         # probing routes through the two-level layer instead
         self._coarse = _has_coarse(self.index_dir)
         if not self._coarse:
-            self._set_centroids(*_load_centroids(self.index_dir))
+            self._cells, self._C = _load_centroids(self.index_dir)
         self._refresh_tombs()
 
-    def _set_centroids(self, cells: np.ndarray, C: np.ndarray) -> None:
-        # probe-side query-independent terms (centroid norms / |c|^2)
-        # are cached per centroid-matrix OBJECT — _load_centroids's LRU
-        # returns the identical arrays while the file is unchanged, so
-        # identity comparison doubles as the staleness check
-        if getattr(self, "_C", None) is not C:
-            self._probe_aux: dict = {}
-        self._cells, self._C = cells, C
-
     def _refresh_tombs(self) -> None:
-        n_tomb, tomb_ids = _tombstone_info(self.index_dir)
+        # the signature is the cached-cell mask version: cells re-mask
+        # when it changes
+        self._tomb_sig, n_tomb, tomb_ids = _tombstone_snapshot(
+            self.index_dir
+        )
         if n_tomb and tomb_ids is None:
             raise ValueError(
                 f"{n_tomb} tombstones exceed the driver-path id budget "
                 f"({_TOMB_ISIN_MAX}); use the distributed ivf_query or "
                 "run ivf_compact_deletes"
             )
-        self._tomb_ids = tomb_ids if n_tomb else None
-        # the cached-cell mask version: cells re-mask when this changes
-        self._tomb_sig = _TOMB_CACHE.get(self.index_dir)
-        self._tomb_sig = self._tomb_sig[0] if self._tomb_sig else None
+        self._tomb_ids = tomb_ids
 
     def probe(self, qv: np.ndarray, n_probe: int) -> list[int]:
-        """Same cell choice as the distributed ``_probe_cells`` —
-        identical arithmetic ORDER to ``_np_space_scores`` with a
-        single-row batch, but with the query-independent centroid
-        terms (norm guards, |c|^2) precomputed once per centroid
-        matrix instead of per query."""
+        """Same cell choice as the engine's ``_probe_cells``."""
         if self._coarse:
             return _probe_cells_two_level(
                 self.index_dir, qv, n_probe, self.space
             )
-        space, C = self.space, self._C
-        if space == "cosine":
-            cn = self._probe_aux.get("cn")
-            if cn is None:
-                cn = np.linalg.norm(C, axis=1)
-                cn = np.where(cn == 0, 1.0, cn)
-                self._probe_aux["cn"] = cn
-            mn = np.sqrt((qv * qv).sum())
-            mn = mn if mn != 0 else 1.0
-            sims = (qv[None, :] @ C.T)[0] / (mn * cn)
-        elif space == "l2":
-            csq = self._probe_aux.get("csq")
-            if csq is None:
-                csq = (C * C).sum(axis=1)
-                self._probe_aux["csq"] = csq
-            sims = 2.0 * (qv[None, :] @ C.T)[0] - csq - (qv * qv).sum()
-        elif space == "innerproduct":
-            sims = (qv[None, :] @ C.T)[0]
-        else:
-            sims = _np_space_scores(qv[None, :], C, space)[0]
-        order = np.lexsort((self._cells, -sims))[:n_probe]
-        return sorted(int(self._cells[i]) for i in order)
+        return _probe_rows(
+            self._cells, self._C, qv[None, :], n_probe, self.space
+        )[0]
 
     def _score_cell(
         self,
@@ -2049,13 +2304,7 @@ class LocalIvfSearcher:
         operation order)."""
         qv = np.asarray(query_vec, dtype=np.float64)
         if check_stale:
-            cells_dir = os.path.join(self.index_dir, "cells")
-            if os.path.isdir(cells_dir):
-                _recover_cell_swaps(cells_dir)
-            self._coarse = _has_coarse(self.index_dir)
-            if not self._coarse:
-                self._set_centroids(*_load_centroids(self.index_dir))
-            self._refresh_tombs()
+            self._bind()
         if probe is None:
             probe = self.probe(qv, n_probe)
         loaded = _local_cells(
@@ -2063,7 +2312,7 @@ class LocalIvfSearcher:
         )
         if not loaded:
             return (np.empty(0, np.int64), np.empty(0, np.float64))
-        tot = sum(m.nbytes for _, m, _, _ in loaded)
+        tot = sum(live["v"].nbytes for _, live, _ in loaded)
         if tot > self.max_bytes:
             raise ValueError(
                 f"probed cells hold {tot} vector bytes > max_bytes="
@@ -2073,28 +2322,18 @@ class LocalIvfSearcher:
         qn = float(np.sqrt(qsq))  # == np.linalg.norm(Q, axis=1) bitwise
         qn_guard = qn if qn != 0 else 1.0
         cand_ids, cand_s = [], []
-        for ids, M, norms, aux in loaded:
+        for _, live, aux in loaded:
+            ids, M, norms = live["vec_id"], live["v"], live["norm"]
             if allow is not None:
                 m = np.isin(ids, allow)
-                if not m.any():
-                    continue
-                ids, M, norms = ids[m], M[m], norms[m]
-                aux = {}  # per-space caches index the full cell
+                # per-space caches index the full cell
+                ids, M, norms, aux = ids[m], M[m], norms[m], {}
             if not len(ids):
                 continue
             s = self._score_cell(M, norms, aux, qv, qn_guard, qsq)
-            if min_score is not None:
-                keep = s >= min_score
-                ids, s = ids[keep], s[keep]
-            elif len(s) > k:
-                # tie-safe cut: keep EVERYTHING scoring >= the kth
-                # best, so the global (score, id) tie-break can never
-                # lose a tied candidate to an arbitrary partition cut
-                kth = np.partition(s, len(s) - k)[len(s) - k]
-                keep = s >= kth
-                ids, s = ids[keep], s[keep]
-            cand_ids.append(ids)
-            cand_s.append(s)
+            keep = _cut(s[:, None], k, min_score)[:, 0]
+            cand_ids.append(ids[keep])
+            cand_s.append(s[keep])
         if not cand_ids:
             return (np.empty(0, np.int64), np.empty(0, np.float64))
         ids = np.concatenate(cand_ids)
@@ -2103,10 +2342,6 @@ class LocalIvfSearcher:
         if min_score is None:
             order = order[:k]
         return ids[order], s[order]
-
-
-#: (index_dir, space) -> LocalIvfSearcher for the functional wrapper
-_LOCAL_SEARCHERS: dict = {}
 
 
 def ivf_query_local(
@@ -2121,51 +2356,26 @@ def ivf_query_local(
     filtered_exact_threshold: int = FILTERED_EXACT_THRESHOLD,
     approximate_threshold: int | None = None,
 ) -> pd.DataFrame:
-    """DRIVER-SIDE IVF query: same probe rule, same float64 scoring,
-    same (score desc, vec_id asc) tie-break as ``ivf_query`` — but the
-    probed cells are read with pyarrow and scored with numpy gemms
-    in-process, no Spark job (the BM25 ``_local_topk`` fast path
-    applied to vectors; reference exact-search-threshold switch,
-    KNNSettings.java:70). This wrapper keeps a process-cached
-    ``LocalIvfSearcher`` per (index_dir, space) and re-validates cheap
-    directory signatures per call; use the searcher directly for the
-    open-once-query-many benchmark regime. Warm-path memory is bounded
-    by ``max_bytes`` (ValueError beyond it — callers fall back to the
-    distributed path). ``min_score`` switches top-k to radial.
-    ``filter_ids`` accepts an iterable of ids; small allow-lists take
-    the exact fallback (every cell probed — KNNSettings.java:87).
-    Returns a pandas DataFrame (vec_id, cos|score, rank)."""
-    key = (index_dir, space)
-    searcher = _LOCAL_SEARCHERS.get(key)
-    if searcher is None or searcher.max_bytes != max_bytes:
-        searcher = LocalIvfSearcher(index_dir, space, max_bytes)
-        _LOCAL_SEARCHERS[key] = searcher
-    qv = np.asarray(query_vec, dtype=np.float64)
-    allow = probe = None
-    if filter_ids is not None:
-        allow = np.fromiter((int(x) for x in filter_ids), dtype=np.int64)
-    # the small-filter exact fallback (KNNSettings.java:87) and the
-    # small-INDEX bypass (approximate_threshold, KNNSettings.java:70)
-    # scan EVERY cell, still bounded by max_bytes. The memoized
-    # early-exit footer count keeps the warm-path decision to one
-    # scandir (~us), preserving the ms/op budget.
-    if (
-        allow is not None and 0 < len(allow) <= filtered_exact_threshold
-    ) or _index_smaller_than(index_dir, approximate_threshold) is not None:
-        _recover_cell_swaps(os.path.join(index_dir, "cells"))
-        probe = sorted(int(c) for c in _load_centroids(index_dir)[0])
-    ids, s = searcher.query(
-        qv, k, n_probe, min_score=min_score, allow=allow, probe=probe
-    )
-    score_name = "cos" if space == "cosine" else "score"
-    return pd.DataFrame(
-        {
-            "vec_id": ids,
-            score_name: np.round(s, 6),
-            "rank": np.arange(1, len(ids) + 1, dtype=np.int32),
-        },
-        copy=False,
-    )
+    """DRIVER-SIDE IVF query: the local transport of the engine behind
+    ``ivf_query`` — the same exact switches, probe, float64 scoring,
+    (score desc, vec_id asc) tie-break and rounding, with the probed
+    cells read by pyarrow and scored by numpy in-process, no Spark job
+    (the BM25 ``_local_topk`` fast path applied to vectors; reference
+    exact-search-threshold switch, KNNSettings.java:70). A query only
+    Spark could answer raises ValueError: probed cells over
+    ``max_bytes``, a tombstone set too large to hold as ids, or a
+    DataFrame filter above ``filtered_exact_threshold``. ``min_score``
+    switches top-k to radial. Use ``LocalIvfSearcher`` for the
+    open-once-query-many benchmark regime. Returns a pandas DataFrame
+    (vec_id, cos|score, rank)."""
+    return _ivf_search(
+        None, index_dir, ["q"], np.asarray([query_vec], dtype=np.float64),
+        k, n_probe=n_probe, space=space, quantizer=None, overquery=None,
+        metrics=None, filter_ids=filter_ids,
+        filtered_exact_threshold=filtered_exact_threshold,
+        approximate_threshold=approximate_threshold, min_score=min_score,
+        max_bytes=max_bytes,
+    ).drop(columns="query_id")
 
 
 # ------------------------------------------------ incremental append
@@ -2316,13 +2526,20 @@ def _tombstone_info(index_dir: str) -> tuple[int, np.ndarray | None]:
     footer row count is read and queries anti-join the tombstone files.
     Cached on the tombstone directory's file signature, so deletes and
     compactions invalidate naturally."""
+    return _tombstone_snapshot(index_dir)[1:]
+
+
+def _tombstone_snapshot(index_dir: str) -> tuple:
+    """(ledger signature, n, ids|None): ``_tombstone_info`` with the
+    signature its ids were read under — the version the driver-side
+    cell masks are keyed on."""
     d = os.path.join(index_dir, "tombstones")
     if not os.path.isdir(d):
-        return 0, None
+        return None, 0, None
     sig = _cell_dir_sig(d)
     hit = _TOMB_CACHE.get(index_dir)
     if hit is not None and hit[0] == sig:
-        return hit[1], hit[2]
+        return hit
     import pyarrow as pa
     import pyarrow.parquet as papq
 
@@ -2336,14 +2553,14 @@ def _tombstone_info(index_dir: str) -> tuple[int, np.ndarray | None]:
     # is genuinely over the In()-predicate limit
     if n and n <= _TOMB_ISIN_MAX * 4:
         t = pa.concat_tables([papq.read_table(p) for p in files])
-        uniq = np.unique(np.asarray(t["vec_id"].to_pylist(), dtype=np.int64))
+        uniq = np.unique(t["vec_id"].to_numpy().astype(np.int64))
         n = len(uniq)  # overlapping delete batches dedupe here
         if n <= _TOMB_ISIN_MAX:
             ids = uniq
     _TOMB_CACHE.put(
         index_dir, (sig, n, ids), ids.nbytes if ids is not None else 64
     )
-    return n, ids
+    return sig, n, ids
 
 
 def _deny_info(index_dir: str):

@@ -17,16 +17,30 @@ small (the exact-filter fallback) and large (a mask inside the probe).
 A Spark call costs about a second here, so the cross is thinned where
 paths share code: the small filter's fallback ignores the quantizer,
 and a single query is the batch of one of the same engine.
+
+The engine answers in-process when the driver can hold what a query
+reads, and through Spark jobs otherwise. The transport axis checks that
+both give bitwise the same rows, that a local call launches no Spark
+job before its result is read, that each reason to need Spark picks
+Spark, and that threads sharing the driver caches get the serial
+answers.
 """
 
 from __future__ import annotations
 
+import sys
+import threading
+
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
+from opensearch_jvector_spark.operators import similarity as sim
 from opensearch_jvector_spark.operators.similarity import (
     LocalIvfSearcher,
+    _LRUBytes,
     _np_exact_batch,
+    _round6,
     ivf_build,
     ivf_delete,
     ivf_query,
@@ -219,3 +233,184 @@ def test_exact_scorer_ties_duplicates_bitwise(space):
                 one = local._score_cell(M, norms, {}, q, qn[j] or 1.0,
                                         float((q * q).sum()))
                 assert np.array_equal(one, S[:, j]), (dim, b, j)
+
+
+# ------------------------------------------------------ transport axis
+
+
+def _answers(spark, data, filter_ids):
+    """Every quantizer's answer for every query, and the radial answer,
+    through the public Spark-API paths; also the transports taken."""
+    d, _, _, queries, _ = data
+    opts = dict(filter_ids=filter_ids, filtered_exact_threshold=SMALL_MAX)
+    out, transports = {}, set()
+    for flag in BATCH:
+        m = {}
+        out[flag] = ivf_query_batch(
+            spark, d, queries, K, n_probe=1, metrics=m, **opts,
+            **({flag: True} if flag else {}),
+        ).orderBy("query_id", "rank").collect()
+        transports.add(m["transport"])
+    for flag in ("use_bq", "use_msq"):
+        m = {}
+        out[flag] = ivf_query(
+            spark, d, queries[0][1], K, n_probe=1, metrics=m, **opts,
+            **{flag: True},
+        ).collect()
+        transports.add(m["transport"])
+    t, _ = _radius(_truth(data, queries[2][0], "none"))
+    out["radial"] = ivf_query_radial(
+        spark, d, queries[2][1], n_probe=1, min_score=t, **opts
+    ).collect()
+    return out, transports
+
+
+@pytest.mark.parametrize("flt", ["none", "small", "large"])
+def test_transports_agree_bitwise(spark, data, flt, monkeypatch):
+    """The in-process and the Spark transport give the same rows —
+    ids, ranks and rounded scores bitwise — for every quantizer, with
+    tombstones, one probed cell and the default first-pass budget (so
+    the first pass really cuts). The large allow-list also goes in as a
+    DataFrame, which only Spark can apply: its rows equal the local
+    answer to the same ids as a list."""
+    flt_ids = data[2][flt]
+    local, how = _answers(spark, data, flt_ids)
+    assert how == {"local"}
+    # no probed cell fits the driver: every query takes Spark jobs
+    monkeypatch.setattr(sim, "LOCAL_IVF_MAX_BYTES", 0)
+    remote, how = _answers(spark, data, flt_ids)
+    assert how == {"spark"}
+    assert remote == local
+    if flt == "large":
+        monkeypatch.undo()
+        ids = spark.createDataFrame([(i,) for i in flt_ids], "vec_id long")
+        frame, how = _answers(spark, data, ids)
+        assert how == {"spark"}
+        assert frame == local
+
+
+def _jobs(spark, group, fn):
+    """fn()'s result and the Spark jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        return out, sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
+def test_local_batch_runs_no_spark_job(spark, data):
+    """A batch the driver can hold is answered before any Spark job:
+    the only job is the caller's read of the result."""
+    d, _, filters, queries, _ = data
+    for flag, flt in ((None, "none"), ("use_pq", "large"), ("use_sq", "none")):
+        m = {}
+        df, jobs = _jobs(spark, f"local-{flag}", lambda: ivf_query_batch(
+            spark, d, queries, K, n_probe=1, filter_ids=filters[flt],
+            filtered_exact_threshold=SMALL_MAX, metrics=m,
+            **({flag: True} if flag else {}),
+        ))
+        assert jobs == [] and m["transport"] == "local", (flag, jobs, m)
+        assert "transport_reason" not in m
+        assert len(df.collect()) == K * len(queries)
+        if flag:  # the first pass keeps its footer accounting
+            assert m["bytes_scanned"] > 0 < m["compression_ratio"], m
+
+
+def test_each_fallback_reason_picks_spark(spark, data, monkeypatch):
+    d, _, filters, queries, _ = data
+
+    def reason(filter_ids=None, **kw):
+        m = {}
+        ivf_query_batch(spark, d, queries, K, n_probe=1, metrics=m,
+                        filter_ids=filter_ids, **kw)
+        assert m["transport"] == "spark", m
+        return m["transport_reason"]
+
+    ids = spark.createDataFrame([(i,) for i in filters["large"]],
+                                "vec_id long")
+    assert "DataFrame filter" in reason(ids, filtered_exact_threshold=SMALL_MAX)
+    monkeypatch.setattr(sim, "_TOMB_ISIN_MAX", 1)
+    sim._TOMB_CACHE.pop(d, None)
+    try:
+        assert "tombstones exceed" in reason()
+        with pytest.raises(ValueError, match="tombstones exceed"):
+            ivf_query_local(d, queries[0][1], K)
+    finally:
+        sim._TOMB_CACHE.pop(d, None)
+    monkeypatch.undo()
+    monkeypatch.setattr(sim, "LOCAL_IVF_MAX_BYTES", 1024)
+    assert "vector bytes > max_bytes=1024" in reason()
+    with pytest.raises(ValueError, match="max_bytes=16"):
+        ivf_query_local(d, queries[0][1], K, max_bytes=16)
+
+
+def test_threads_sharing_caches_get_serial_answers(
+    spark, data, tmp_path, monkeypatch
+):
+    """Four threads each run quantized and exact batches against two
+    indexes through one driver cache small enough that cells evict and
+    reload while the others read them."""
+    d, _, _, queries, _ = data
+    d2 = str(tmp_path / "idx4")
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in np.random.default_rng(i).normal(size=DIM)])
+         for i in range(N)],
+        "vec_id long, embedding array<double>",
+    )
+    ivf_build(emb, d2, n_centroids=4, kmeans_iters=1, pq_m=4, sq=True)
+
+    def run():
+        return [
+            ivf_query_batch(spark, idx, queries, K, n_probe=2,
+                            **({flag: True} if flag else {})).collect()
+            for idx in (d, d2) for flag in BATCH
+        ]
+
+    serial = run()
+    monkeypatch.setattr(sim, "_LOCAL_IVF_CACHE", _LRUBytes(64 << 10))
+    got, errors = [None] * 4, []
+
+    def worker(i):
+        try:
+            got[i] = run()
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    threads = [threading.Thread(target=worker, args=(i,)) for i in range(4)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert all(g == serial for g in got)
+
+
+def test_round6_matches_spark_round_on_half_way_values(spark):
+    """In-process results round like F.round(score, 6): HALF_UP on the
+    decimal form, where np.round's binary half-even rounding differs."""
+    rng = np.random.default_rng(SEED)
+    half = [float(f"{m / 1e6:.6f}5") for m in rng.integers(0, 10**6, 1500)]
+    xs = np.array(
+        half + [-x for x in half[:500]]
+        + [float(f"{m}.{f:06d}5") for m, f in zip(
+            rng.integers(1, 10**5, 200), rng.integers(0, 10**6, 200))]
+        + list(rng.normal(size=300))
+        + [0.0, 1.0, -1.0, 1e-9, 2.5e12, 4e15 + 0.5, -3.7e20, 1e300]
+    )
+    want = [
+        r["r"] for r in spark.createDataFrame(
+            [(i, float(x)) for i, x in enumerate(xs)], "i int, x double"
+        ).select("i", F.round("x", 6).alias("r")).orderBy("i").collect()
+    ]
+    assert _round6(xs).tolist() == want
+    assert np.round(xs, 6).tolist() != want  # the case it exists for

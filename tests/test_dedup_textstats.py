@@ -442,17 +442,24 @@ def test_default_caps_finite_and_flood_bounded(spark):
     assert {(r.doc_a, r.doc_b) for r in m} == {(100, 101)}
 
 
-def test_persisted_ivf_kmeans_recall_and_pruned_scan(spark, tmp_path):
+def test_persisted_ivf_kmeans_recall_and_pruned_scan(
+    spark, tmp_path, monkeypatch
+):
     """The production IVF lifecycle (reference: build graph at flush,
     probe at search — JVectorWriter.flush / JVectorReader.search):
     k-means-refined index built ONCE; queries read only their probed
     cell directories and hit the recall floor the reference's own suite
-    uses (>= 0.75 of exact top-k, RecallTestsIT.java:123-125)."""
+    uses (>= 0.75 of exact top-k, RecallTestsIT.java:123-125). The
+    pruning check reads the Spark plan's input files, so the query is
+    pinned to the Spark transport."""
+    from opensearch_jvector_spark.operators import similarity
     from opensearch_jvector_spark.operators.similarity import (
         cosine_topk_bruteforce,
         ivf_build,
         ivf_query,
     )
+
+    monkeypatch.setattr(similarity, "LOCAL_IVF_MAX_BYTES", 0)
 
     embs = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     index_dir = str(tmp_path / "ivf")

@@ -13,6 +13,8 @@ eviction accounting.
 from __future__ import annotations
 
 import os
+import sys
+import threading
 
 import numpy as np
 import pytest
@@ -21,6 +23,7 @@ from pyspark.sql import functions as F
 from opensearch_jvector_spark.operators.similarity import (
     LocalIvfSearcher,
     _LRUBytes,
+    _round6,
     ivf_build,
     ivf_delete,
     ivf_query,
@@ -64,21 +67,16 @@ def test_searcher_matches_distributed_exact(spark, ivf_dir, space):
     assert loc_rows == dist_rows
 
 
-def test_searcher_matches_wrapper_and_is_reused(spark, ivf_dir):
-    """ivf_query_local delegates to a process-cached searcher; results
-    agree and repeated calls reuse the same instance."""
+def test_searcher_matches_wrapper(spark, ivf_dir):
+    """ivf_query_local (the engine's in-process transport) and the
+    pre-bound searcher give the same ids and, after the engine's
+    F.round-compatible rounding, the same scores."""
     q = _qvec(spark, 3)
     pdf = ivf_query_local(ivf_dir, q, 10, n_probe=4)
     s = LocalIvfSearcher(ivf_dir)
     ids, scores = s.query(np.asarray(q, dtype=np.float64), 10, n_probe=4)
     assert pdf["vec_id"].tolist() == ids.tolist()
-    assert pdf["cos"].tolist() == np.round(scores, 6).tolist()
-
-    from opensearch_jvector_spark.operators import similarity as sim
-
-    a = sim._LOCAL_SEARCHERS.get((ivf_dir, "cosine"))
-    ivf_query_local(ivf_dir, q, 10, n_probe=4)
-    assert sim._LOCAL_SEARCHERS.get((ivf_dir, "cosine")) is a
+    assert pdf["cos"].tolist() == _round6(scores).tolist()
 
 
 def test_searcher_radial_and_allow(spark, ivf_dir):
@@ -134,6 +132,44 @@ def test_lru_bytes_eviction_and_accounting():
     assert lru.bytes == 50 and lru.get("a") == 9
     assert lru.pop("zzz", "dflt") == "dflt"
     assert lru.pop("c") == 3 and lru.bytes == 10
+
+
+def test_lru_bytes_accounting_survives_threads():
+    """Eight threads put, get and pop over shared keys with a tiny
+    switch interval: the byte count still equals the summed entry sizes
+    and stays within budget — a lost update would break either."""
+    lru = _LRUBytes(500)
+    switch = sys.getswitchinterval()
+    errors = []
+
+    def worker(seed):
+        rng = np.random.default_rng(seed)
+        try:
+            for _ in range(3000):
+                key = int(rng.integers(0, 16))
+                op = rng.integers(0, 3)
+                if op == 0:
+                    lru.put(key, seed, int(rng.integers(1, 100)))
+                elif op == 1:
+                    lru.get(key)
+                else:
+                    lru.pop(key)
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert lru.bytes == sum(lru._sizes.values())
+    assert lru.bytes <= lru.max_bytes or len(lru) == 1
 
 
 def test_local_cell_cache_evicts_across_indexes(spark, tmp_path):
