@@ -31,9 +31,11 @@ from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import arrow_frame
 from .quantize import QUANTIZERS
 
 SPACES = ("cosine", "l2", "l1", "linf", "innerproduct")
@@ -1480,7 +1482,10 @@ def _ivf_search(
     budget. ``spark=None`` returns the local pandas frame and raises
     ValueError where only Spark could answer."""
     score_name = "cos" if space == "cosine" else "score"
-    empty = f"query_id string, vec_id long, {score_name} double, rank int"
+    result = pa.schema([
+        ("query_id", pa.string()), ("vec_id", pa.int64()),
+        (score_name, pa.float64()), ("rank", pa.int32()),
+    ])
     note = metrics if metrics is not None else {}
     small = _allow_ids_if_small(filter_ids, filtered_exact_threshold)
     n_small = None
@@ -1514,12 +1519,12 @@ def _ivf_search(
             index_dir, paths, cell_to_q, qids, Q, k, space, quantizer,
             overquery, min_score, filter_ids, score_name, metrics,
         )
-        return pdf if spark is None else spark.createDataFrame(pdf, empty)
+        return pdf if spark is None else arrow_frame(spark, result, pdf)
     note.update(transport="spark", transport_reason=reason)
     if spark is None:
         raise ValueError(f"{reason}; use the distributed ivf_query")
     if not paths:
-        return spark.createDataFrame([], empty)
+        return arrow_frame(spark, result)
 
     def probed(cols: str) -> DataFrame:
         scan = (
@@ -1554,7 +1559,7 @@ def _ivf_search(
             len(qids),
         ))
     if not cand_rows:
-        return spark.createDataFrame([], empty)
+        return arrow_frame(spark, result)
     return _rank_per_query(
         _rerank(spark, paths, qids, Q, space, score_name, cand_rows),
         k, score_name,

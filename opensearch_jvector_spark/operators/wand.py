@@ -26,6 +26,15 @@ Our plan (SURVEY.md §3.1 Spark trace):
      asc).limit(k) (TakeOrderedAndProject — partial + final top-k,
      the Lucene per-leaf + global merge analog).
 
+Two transports run that plan and share the MaxScore loop
+(``_maxscore``); they differ only in how the postings arrive. The Spark
+transport is steps 2-4 above. The driver transport (``_local_topk``)
+answers when a warmed store holds the norms, the batch is unfiltered
+and its postings fit ``driver_topk_max_postings``: one pyarrow read,
+one decode and one scoring of the whole batch's postings, the loop per
+(chunk, query), one lexsort for the ranks, and no Spark job until the
+caller reads the result. Both give bitwise-identical rows.
+
 Filtered search (reference acceptDocs, JVectorReader.java:167-182)
 pushes the allow-bitmap INSIDE the MaxScore loop — the mask only
 removes candidates, so theta / suffix bounds stay valid and block
@@ -40,7 +49,9 @@ Per-query pruning metrics (reference: KNNCounter.java:13-37,
 KNNGraphValue.java:17-23 — visited/reranked/expanded counters): pass a
 ``QueryMetrics`` and the kernels report terms seen, blocks decoded vs
 skipped and candidate counts through Spark accumulators — the evidence
-that block-max pruning actually prunes (bench.py records them).
+that block-max pruning actually prunes (bench.py records them). The
+driver transport decodes every block of the batch once, so it reports
+those blocks as decoded and none as skipped.
 
 All kernels are numpy-vectorized over Arrow batches.
 """
@@ -49,16 +60,23 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
 from ..functions.bm25 import block_upper_bound, idf_np, score_np
-from ..functions.codec import decode_blocks
+from ..functions.codec import decode_blocks, varint_decode
 from ..plans.query import Query
+from ..session import arrow_frame
 from ..sources.index_store import IndexStore
 
 _RESULT_SCHEMA = "query_id string, doc_id long, score double"
+_RANKED = pa.schema(
+    [("query_id", pa.string()), ("doc_id", pa.int64()),
+     ("score", pa.float64()), ("rank", pa.int32())]
+)
 
 _POST_COLS = (
     "term", "slice", "doc_bytes", "tf_bytes", "block_first", "block_last",
@@ -69,7 +87,7 @@ _POST_COLS = (
 
 class QueryMetrics:
     """Per-batch search counters (Spark accumulators — aggregated across
-    every chunk task; also updated in-place by the driver fast path).
+    every chunk task; also updated in-place by the driver transport).
     Reference analog: KNNCounter / KNNGraphValue node-level stats."""
 
     FIELDS = (
@@ -153,8 +171,7 @@ def _chunk_mask(nrow, n_slots: int, has_filter: bool):
     "all allowed". Returns (mask, empty) — empty=True when a filter is
     present but admits nothing in this chunk."""
     mask = None
-    allow_raw = nrow.get("mask_bytes") if hasattr(nrow, "get") else nrow["mask_bytes"]
-    deny_raw = nrow.get("deny_bytes") if hasattr(nrow, "get") else nrow["deny_bytes"]
+    allow_raw, deny_raw = nrow["mask_bytes"], nrow["deny_bytes"]
     if has_filter:
         if allow_raw is None:
             return None, True
@@ -169,6 +186,87 @@ def _chunk_mask(nrow, n_slots: int, has_filter: bool):
     return mask, False
 
 
+def _maxscore(query, info, full, pruned, base: int, n_slots: int, mask, m: dict):
+    """One query's MaxScore top-k over one chunk — the loop both
+    transports share; they differ only in how a term's postings arrive.
+
+    ``info`` maps each term present in the chunk to (score upper bound,
+    block count). ``full(t)`` gives the term's (docs, scores), ascending
+    by doc; ``pruned(t, cand_docs)`` gives at least the postings of the
+    sorted candidate docs (the Spark transport decodes only the blocks
+    whose range meets a candidate). ``m`` collects the counters.
+    Returns (chunk slots, scores), or None when no term is present."""
+    _, qterms, k, min_score = query
+    terms = [t for t in qterms if t in info]
+    if not terms:
+        return None
+    m["terms_seen"] += len(terms)
+    m["blocks_total"] += sum(info[t][1] for t in terms)
+    ubs = np.array([info[t][0] for t in terms])
+    order = np.argsort(-ubs, kind="stable")
+    terms = [terms[i] for i in order]
+    suffix = np.concatenate((np.cumsum(ubs[order][::-1])[::-1], [0.0]))
+
+    acc = np.zeros(n_slots, dtype=np.float64)
+    touched = np.zeros(n_slots, dtype=bool)
+    # the mask does NOT disable pruning: it only removes candidates, so
+    # theta (k-th best allowed score) and the suffix bound (max any
+    # unseen doc could still gain) remain a valid MaxScore pair.
+    # min_score (radial) needs every qualifying doc: the exact path.
+    use_pruning = min_score is None and k is not None
+    theta = -np.inf
+    i = 0
+    while i < len(terms):
+        if use_pruning and suffix[i] < theta:
+            break
+        docs, scores = full(terms[i])
+        loc = docs - base
+        if mask is not None:
+            keep = mask[loc]
+            loc, scores = loc[keep], scores[keep]
+        acc[loc] += scores
+        touched[loc] = True
+        i += 1
+        if use_pruning:
+            tv = acc[touched]
+            if len(tv) >= k:
+                theta = np.partition(tv, len(tv) - k)[len(tv) - k]
+    if i < len(terms):
+        # non-essential phase: candidates only (already mask-filtered,
+        # so masked docs miss the hit test)
+        sel = np.nonzero(touched & (acc + suffix[i] >= theta))[0]
+        cand = sel + base
+        for t in terms[i:]:
+            docs, scores = pruned(t, cand)
+            if not len(docs) or not len(cand):
+                continue
+            pos = np.minimum(np.searchsorted(docs, cand), len(docs) - 1)
+            hit = docs[pos] == cand
+            acc[sel[hit]] += scores[pos[hit]]
+    else:
+        sel = np.nonzero(touched)[0]
+    m["candidates"] += len(sel)
+
+    scores = acc[sel]
+    if min_score is not None:
+        keep = scores >= min_score
+        return sel[keep], scores[keep]
+    if len(sel) > k:
+        # exact tie handling: keep everything >= the k-th score, then
+        # order by (score desc, doc asc) as the final merge does
+        kth = scores[np.argpartition(-scores, k - 1)[:k]].min()
+        keep = np.nonzero(scores >= kth)[0]
+        sel, scores = sel[keep], scores[keep]
+    ordr = np.lexsort((sel, -scores))[:k]
+    return sel[ordr], scores[ordr]
+
+
+def _count(metrics: QueryMetrics | None, m: dict) -> None:
+    if metrics is not None:
+        for f, v in m.items():
+            getattr(metrics, f).add(v)
+
+
 def _query_kernel(
     queries: list[tuple[str, tuple[str, ...], int | None, float | None]],
     idfs: dict[str, float],
@@ -177,28 +275,24 @@ def _query_kernel(
     has_filter: bool,
     metrics: QueryMetrics | None = None,
 ):
-    """Per-chunk kernel body, shared by all queries in the batch."""
+    """Spark transport: the per-chunk cogroup kernel. Postings arrive
+    as Arrow rows; a term decodes in full once per chunk when it is
+    essential for some query, else block-selectively per query."""
     k1, b = config_vals
 
     def kernel(key, post_pdf: pd.DataFrame, norms_pdf: pd.DataFrame) -> pd.DataFrame:
         from ..functions.runtime import limit_worker_threads
 
         limit_worker_threads()
+        out = {"query_id": [], "doc_id": [], "score": []}
         if len(post_pdf) == 0 or len(norms_pdf) == 0:
-            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
-        # plain-dict row views over numpy columns: pandas
-        # to_dict("records") / .iloc chains were ~half the kernel wall
-        # for small chunks (profiled), and this kernel runs once per
-        # chunk on BOTH the executor and driver fast paths
-        nrow = {
-            c: norms_pdf[c].to_numpy()[0] for c in norms_pdf.columns
-        }
+            return pd.DataFrame(out)
+        nrow = {c: norms_pdf[c].to_numpy()[0] for c in norms_pdf.columns}
         base = int(nrow["base_doc"])
         dls = np.frombuffer(nrow["dl_bytes"], dtype=np.int32)
-        n_slots = len(dls)
-        mask, empty = _chunk_mask(nrow, n_slots, has_filter)
+        mask, empty = _chunk_mask(nrow, len(dls), has_filter)
         if empty:
-            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
+            return pd.DataFrame(out)
 
         cols = {c: post_pdf[c].to_numpy() for c in _POST_COLS}
         by_term: dict[str, list[dict]] = {}
@@ -206,139 +300,90 @@ def _query_kernel(
             by_term.setdefault(cols["term"][i], []).append(
                 {c: cols[c][i] for c in _POST_COLS}
             )
-        decode_cache: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        m_terms = m_total = m_decoded = m_skipped = m_cand = 0
-
-        def full_decode(t: str):
-            nonlocal m_decoded
-            if t not in decode_cache:
-                d, tf, nb = _decode_term_rows(by_term[t])
-                m_decoded += nb
-                decode_cache[t] = (d, tf)
-            return decode_cache[t]
-
-        def n_blocks(t: str) -> int:
-            return sum(len(r["block_first"]) for r in by_term[t])
-
-        out_q, out_d, out_s = [], [], []
-
-        for qid, qterms, k, min_score in queries:
-            terms = [t for t in qterms if t in by_term and t in idfs]
-            if not terms:
-                continue
-            m_terms += len(terms)
-            m_total += sum(n_blocks(t) for t in terms)
-            ubs = np.array(
-                [_term_upper_bound(by_term[t], idfs[t], avgdl, k1, b) for t in terms]
+        info = {
+            t: (
+                _term_upper_bound(rows, idfs[t], avgdl, k1, b),
+                sum(len(r["block_first"]) for r in rows),
             )
-            order = np.argsort(-ubs, kind="stable")
-            terms = [terms[i] for i in order]
-            ubs = ubs[order]
-            suffix = np.concatenate((np.cumsum(ubs[::-1])[::-1], [0.0]))
+            for t, rows in by_term.items()
+            if t in idfs
+        }
+        m = dict.fromkeys(QueryMetrics.FIELDS, 0)
+        m["chunks"] = 1
+        scored: dict[str, tuple[np.ndarray, np.ndarray]] = {}
 
-            acc = np.zeros(n_slots, dtype=np.float64)
-            touched = np.zeros(n_slots, dtype=bool)
-            # the mask does NOT disable pruning: it only removes
-            # candidates, so theta (k-th best allowed score) and the
-            # suffix bound (max any unseen doc could still gain) remain
-            # a valid MaxScore pair. min_score (radial) needs every
-            # qualifying doc, so it takes the exact path.
-            use_pruning = min_score is None and k is not None
-            theta = -np.inf
-            i = 0
-            n_terms = len(terms)
-            while i < n_terms:
-                if use_pruning and suffix[i] < theta:
-                    break
-                docs, tfs = full_decode(terms[i])
-                loc = docs - base
-                if mask is not None:
-                    keep = mask[loc]
-                    loc = loc[keep]
-                    tfs = tfs[keep]
-                acc[loc] += score_np(tfs, dls[loc], idfs[terms[i]], avgdl, k1, b)
-                touched[loc] = True
-                i += 1
-                if use_pruning:
-                    tv = acc[touched]
-                    if len(tv) >= k:
-                        theta = np.partition(tv, len(tv) - k)[len(tv) - k]
-            if i < n_terms:
-                # non-essential phase: candidates only
-                cand = np.nonzero(touched & (acc + suffix[i] >= theta))[0]
-                m_cand += len(cand)
-                cand_g = cand + base
-                for j in range(i, n_terms if len(cand_g) else i):
-                    docs, tfs, dec, tot = _decode_term_rows_pruned(
-                        by_term[terms[j]], cand_g
-                    )
-                    m_decoded += dec
-                    m_skipped += tot - dec
-                    if not len(docs):
-                        continue
-                    pos = np.searchsorted(cand_g, docs)
-                    pos = np.minimum(pos, len(cand_g) - 1)
-                    # no extra mask step here: cand is mask-filtered
-                    # already, so masked docs miss this hit test
-                    hit = cand_g[pos] == docs
-                    loc = docs[hit] - base
-                    acc[loc] += score_np(
-                        tfs[hit], dls[loc], idfs[terms[j]], avgdl, k1, b
-                    )
-                if not len(cand_g):
-                    # every remaining term's blocks were skipped outright
-                    m_skipped += sum(n_blocks(terms[j]) for j in range(i, n_terms))
-                sel = cand
-            else:
-                sel = np.nonzero(touched)[0]
-                m_cand += len(sel)
+        def score(t, docs, tfs):
+            return docs, score_np(tfs, dls[docs - base], idfs[t], avgdl, k1, b)
 
-            if min_score is not None:
-                keep = sel[acc[sel] >= min_score]
-                out_q.extend([qid] * len(keep))
-                out_d.extend((keep + base).tolist())
-                out_s.extend(acc[keep].tolist())
-            else:
-                scores = acc[sel]
-                if len(sel) > k:
-                    part = np.argpartition(-scores, k - 1)[:k]
-                    # exact tie handling: take everything >= kth score,
-                    # final global sort breaks ties by doc_id
-                    kth = scores[part].min()
-                    keep_idx = np.nonzero(scores >= kth)[0]
-                else:
-                    keep_idx = np.arange(len(sel))
-                ordr = np.lexsort((sel[keep_idx], -scores[keep_idx]))[: k]
-                keep = keep_idx[ordr]
-                out_q.extend([qid] * len(keep))
-                out_d.extend((sel[keep] + base).tolist())
-                out_s.extend(scores[keep].tolist())
+        def full(t):
+            if t not in scored:
+                d, tf, nb = _decode_term_rows(by_term[t])
+                m["blocks_decoded"] += nb
+                scored[t] = score(t, d, tf)
+            return scored[t]
 
-        if metrics is not None:
-            metrics.chunks.add(1)
-            metrics.terms_seen.add(m_terms)
-            metrics.blocks_total.add(m_total)
-            metrics.blocks_decoded.add(m_decoded)
-            metrics.blocks_skipped.add(m_skipped)
-            metrics.candidates.add(m_cand)
-        return pd.DataFrame(
-            {"query_id": out_q, "doc_id": out_d, "score": out_s}
-        )
+        def pruned(t, cand):
+            if t in scored:
+                return scored[t]
+            d, tf, dec, tot = _decode_term_rows_pruned(by_term[t], cand)
+            m["blocks_decoded"] += dec
+            m["blocks_skipped"] += tot - dec
+            return score(t, d, tf)
+
+        for q in queries:
+            hit = _maxscore(q, info, full, pruned, base, len(dls), mask, m)
+            if hit is not None:
+                out["query_id"].extend([q[0]] * len(hit[0]))
+                out["doc_id"].extend((hit[0] + base).tolist())
+                out["score"].extend(hit[1].tolist())
+        _count(metrics, m)
+        return pd.DataFrame(out)
 
     return kernel
 
 
-def _deny_pdf_for_chunk(
-    tombstones: np.ndarray, base: int, n_slots: int
-) -> bytes | None:
-    ids = tombstones[
-        (tombstones >= base) & (tombstones < base + n_slots)
-    ]
-    if not len(ids):
-        return None
-    bits = np.zeros(n_slots, dtype=np.uint8)
-    bits[ids - base] = 1
-    return np.packbits(bits).tobytes()
+def _starts(changed: np.ndarray) -> np.ndarray:
+    """Start index of every run, from the ``a[1:] != a[:-1]`` flags."""
+    return np.concatenate(([0], np.nonzero(changed)[0] + 1))
+
+
+def _flat_bytes(col) -> np.ndarray:
+    """The concatenated bytes of a binary column's rows, in row order:
+    a view of the Arrow data buffer, no per-row copy."""
+    arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+    wide = pa.types.is_large_binary(arr.type)
+    offs = np.frombuffer(arr.buffers()[1], np.int64 if wide else np.int32)
+    offs = offs[arr.offset : arr.offset + len(arr) + 1]
+    return np.frombuffer(arr.buffers()[2], np.uint8)[offs[0] : offs[-1]]
+
+
+def _decode_batch(tbl):
+    """Decode a batch's whole postings table at once. ``tbl`` is sorted
+    by (chunk_id, term, slice); every row holds a whole number of
+    varints, so each byte stream decodes in ONE ``varint_decode`` call
+    over the column's flat buffer, then one segmented cumsum restarts
+    the doc deltas at each block. Returns per-block (max_tf, min_dl,
+    count) and per-posting (docs, tfs), block and posting order
+    following the rows.
+
+    Raises ValueError when a stream holds another number of values
+    than its rows' blocks count, or a block's docs leave its
+    [block_first, block_last] range (a corrupt or mis-tiled row)."""
+
+    def flat(name):
+        return pc.list_flatten(tbl[name]).to_numpy().astype(np.int64)
+
+    first, last, count = flat("block_first"), flat("block_last"), flat("block_count")
+    n = int(count.sum())
+    deltas = varint_decode(_flat_bytes(tbl["doc_bytes"]), count=n).astype(np.int64)
+    tfs = varint_decode(_flat_bytes(tbl["tf_bytes"]), count=n).astype(np.int64)
+    block_of = np.repeat(np.arange(len(count)), count)
+    raw = np.cumsum(deltas)
+    starts = np.cumsum(count) - count
+    docs = raw - raw[starts][block_of] + first[block_of]
+    if ((docs < first[block_of]) | (docs > last[block_of])).any():
+        raise ValueError("posting block decodes outside its [block_first, block_last]")
+    return flat("block_max_tf"), flat("block_min_dl"), count, docs, tfs
 
 
 def _local_topk(
@@ -351,64 +396,98 @@ def _local_topk(
     stats: dict,
     metrics: QueryMetrics | None = None,
 ) -> DataFrame:
-    """Driver-side exact path for small queries: pruned pyarrow read of
-    the matching posting slices, the SAME per-chunk kernel run locally
-    over the warmed driver norms, then the same global tie-break.
-    Rank-identical to the distributed path by construction (shared
-    kernel + shared final ordering); no Spark job is dispatched until
-    the (tiny) result DataFrame is created. Tombstones become per-chunk
-    deny bitmaps exactly as in the distributed path."""
+    """Driver transport: the whole batch in one vectorized pass. One
+    pruned pyarrow read of the query terms' posting rows, one decode
+    (``_decode_batch``), one BM25 scoring of every posting and one
+    upper bound per (chunk, term); then the shared ``_maxscore`` loop
+    per (chunk, query) over the warmed driver norms, with tombstones
+    as a per-chunk deny mask, and one lexsort that ranks the batch.
+    No Spark job runs until the caller reads the result."""
+    k1, b = config.k1, config.b
+    norms = store._driver_norms
     tbl = store.read_postings_arrow(list(idfs), config, stats)
-    tombs = store._driver_tombstones
-    qspec = [(q.query_id, q.terms, q.k, q.min_score) for q in queries]
-    kernel = _query_kernel(
-        qspec, idfs, avgdl, (config.k1, config.b), False, metrics
+    if tbl is not None:
+        tbl = tbl.filter(pc.is_in(tbl["chunk_id"], pa.array(list(norms), pa.int64())))
+    if tbl is None or not tbl.num_rows:
+        return arrow_frame(spark, _RANKED)
+    tbl = tbl.sort_by(
+        [("chunk_id", "ascending"), ("term", "ascending"), ("slice", "ascending")]
+    ).combine_chunks()
+    max_tf, min_dl, count, docs, tfs = _decode_batch(tbl)
+
+    # (chunk, term) groups: runs of rows, then of blocks and postings
+    chunk = tbl["chunk_id"].to_numpy()
+    terms = np.array(tbl["term"].to_pylist(), dtype=object)
+    row_blocks = pc.list_value_length(tbl["block_first"]).to_numpy()
+    g_row = _starts((chunk[1:] != chunk[:-1]) | (terms[1:] != terms[:-1]))
+    g_terms, g_chunk = terms[g_row].tolist(), chunk[g_row]
+    b_edge = np.concatenate(([0], np.cumsum(row_blocks)))[np.append(g_row, len(terms))]
+    p_edge = np.concatenate(([0], np.cumsum(count)))[b_edge]
+    g_blocks = np.diff(b_edge)
+    g_idf = np.array([idfs[t] for t in g_terms])
+    c_row = _starts(g_chunk[1:] != g_chunk[:-1])
+    chunk_groups = list(zip(c_row, np.append(c_row[1:], len(g_terms))))
+
+    # score every posting once, and bound every (chunk, term) once
+    dl = np.empty(len(docs), dtype=np.int32)
+    for g0, g1 in chunk_groups:
+        base, dls = norms[int(g_chunk[g0])]
+        seg = slice(p_edge[g0], p_edge[g1])
+        dl[seg] = dls[docs[seg] - base]
+    scores = score_np(tfs, dl, np.repeat(g_idf, np.diff(p_edge)), avgdl, k1, b)
+    ub = np.maximum.reduceat(
+        block_upper_bound(max_tf, min_dl, np.repeat(g_idf, g_blocks), avgdl, k1, b),
+        b_edge[:-1],
     )
-    parts = []
-    if tbl is not None and tbl.num_rows:
-        pdf = tbl.to_pandas()
-        for chunk_id, grp in pdf.groupby("chunk_id"):
-            entry = store._driver_norms.get(int(chunk_id))
-            if entry is None:
-                continue
-            base, dls = entry
-            deny = (
-                _deny_pdf_for_chunk(tombs, base, len(dls))
-                if tombs is not None
-                else None
+
+    slot: dict[str, int] = {}  # query_id -> result key (the Spark window's partition)
+    qkey = [slot.setdefault(q.query_id, len(slot)) for q in queries]
+    qspec = [(q.query_id, q.terms, q.k, q.min_score) for q in queries]
+    m = dict.fromkeys(QueryMetrics.FIELDS, 0)
+    m["blocks_decoded"] = len(count)
+    tombs = store._driver_tombstones
+    out_q, out_d, out_s = [], [], []
+    for g0, g1 in chunk_groups:
+        base, dls = norms[int(g_chunk[g0])]
+        m["chunks"] += 1
+        mask = None
+        if tombs is not None:
+            lo, hi = np.searchsorted(tombs, [base, base + len(dls)])
+            if hi > lo:
+                mask = np.ones(len(dls), dtype=bool)
+                mask[tombs[lo:hi] - base] = False
+        lists = {
+            g_terms[g]: (docs[p_edge[g] : p_edge[g + 1]], scores[p_edge[g] : p_edge[g + 1]])
+            for g in range(g0, g1)
+        }
+        info = {g_terms[g]: (ub[g], g_blocks[g]) for g in range(g0, g1)}
+        for key, q in zip(qkey, qspec):
+            hit = _maxscore(
+                q, info, lists.__getitem__, lambda t, _: lists[t],
+                base, len(dls), mask, m,
             )
-            norms_pdf = pd.DataFrame(
-                {
-                    "chunk_id": [int(chunk_id)],
-                    "base_doc": [base],
-                    "n_slots": [len(dls)],
-                    "dl_bytes": [dls.tobytes()],
-                    "mask_bytes": [None],
-                    "deny_bytes": [deny],
-                }
-            )
-            parts.append(kernel((int(chunk_id),), grp, norms_pdf))
-    if parts:
-        res = pd.concat(parts, ignore_index=True)
-    else:
-        res = pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
-    # global per-query rank: (score desc, doc_id asc) — identical to
-    # the distributed window
-    out_rows = {"query_id": [], "doc_id": [], "score": [], "rank": []}
-    kmap = {q.query_id: q.k for q in queries}
-    for qid, grp in res.groupby("query_id"):
-        scores = grp["score"].to_numpy()
-        docs = grp["doc_id"].to_numpy().astype(np.int64)
-        order = np.lexsort((docs, -scores))
-        k = kmap.get(qid)
-        if k is not None and k >= 0 and k < len(order):
-            order = order[:k]
-        out_rows["query_id"].extend([qid] * len(order))
-        out_rows["doc_id"].extend(docs[order].tolist())
-        out_rows["score"].extend(scores[order].tolist())
-        out_rows["rank"].extend(range(1, len(order) + 1))
-    return spark.createDataFrame(
-        pd.DataFrame(out_rows), schema=_RESULT_SCHEMA + ", rank int"
+            if hit is not None:
+                out_q.append(np.full(len(hit[0]), key))
+                out_d.append(hit[0] + base)
+                out_s.append(hit[1])
+    _count(metrics, m)
+    if not out_q:
+        return arrow_frame(spark, _RANKED)
+
+    # global per-query rank: (score desc, doc_id asc), the Spark window's order
+    q, d, s = np.concatenate(out_q), np.concatenate(out_d), np.concatenate(out_s)
+    order = np.lexsort((d, -s, q))
+    q, d, s = q[order], d[order], s[order]
+    first = _starts(q[1:] != q[:-1])
+    rank = np.arange(len(q)) - np.repeat(first, np.diff(np.append(first, len(q)))) + 1
+    kmax = np.zeros(len(slot), dtype=np.int64)
+    for key, qr in zip(qkey, queries):
+        kmax[key] = qr.k if qr.k is not None else len(q)
+    keep = rank <= kmax[q]
+    ids = pa.array(list(slot), pa.string()).take(pa.array(q[keep]))
+    return arrow_frame(
+        spark, _RANKED,
+        {"query_id": ids, "doc_id": d[keep], "score": s[keep], "rank": rank[keep]},
     )
 
 
@@ -448,7 +527,7 @@ def bm25_topk_batch(
     avgdl = float(stats["avgdl"])
     all_terms = sorted({t for q in queries for t in q.terms})
     if not all_terms:
-        return spark.createDataFrame([], _RESULT_SCHEMA + ", rank int")
+        return arrow_frame(spark, _RANKED)
 
     # global idf from the dictionary (pruned tiny read, or the warm
     # driver-side cache after store.warm())
@@ -458,6 +537,8 @@ def bm25_topk_batch(
         t: float(idf_np(np.array([dfs[t]], dtype=np.float64), n_docs)[0])
         for t in dfs
     }
+    if not idfs:  # no query term is in the dictionary: zero hits, no read
+        return arrow_frame(spark, _RANKED)
 
     has_tombs = bool(stats.get("tombstone_batches"))
 

@@ -27,3 +27,22 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(group, fn)`` runs fn() under a Spark job group and
+    returns (fn's result, the ids of the jobs launched in the group)."""
+
+    def run(group: str, fn):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+            return out, sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+
+    return run

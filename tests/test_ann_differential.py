@@ -289,26 +289,13 @@ def test_transports_agree_bitwise(spark, data, flt, monkeypatch):
         assert frame == local
 
 
-def _jobs(spark, group, fn):
-    """fn()'s result and the Spark jobs it launched."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-        return out, sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
-
-
-def test_local_batch_runs_no_spark_job(spark, data):
+def test_local_batch_runs_no_spark_job(spark, data, spark_jobs):
     """A batch the driver can hold is answered before any Spark job:
     the only job is the caller's read of the result."""
     d, _, filters, queries, _ = data
     for flag, flt in ((None, "none"), ("use_pq", "large"), ("use_sq", "none")):
         m = {}
-        df, jobs = _jobs(spark, f"local-{flag}", lambda: ivf_query_batch(
+        df, jobs = spark_jobs(f"local-{flag}", lambda: ivf_query_batch(
             spark, d, queries, K, n_probe=1, filter_ids=filters[flt],
             filtered_exact_threshold=SMALL_MAX, metrics=m,
             **({flag: True} if flag else {}),

@@ -179,7 +179,7 @@ def test_ivf_append_encodes_new_vectors(spark, tmp_path, name):
 
 
 @pytest.mark.parametrize("name", ["pq", "bq", "msq"])
-def test_ivf_append_refuses_missing_trained_state(spark, tmp_path, name):
+def test_ivf_append_refuses_missing_trained_state(spark, tmp_path, name, spark_jobs):
     """Cells that carry a quantizer's codes but an index dir that lost
     its trained state: ``ivf_append`` fails on the driver, naming the
     missing state, before any Spark job runs."""
@@ -189,14 +189,10 @@ def test_ivf_append_refuses_missing_trained_state(spark, tmp_path, name):
               **opts)
     shutil.rmtree(os.path.join(d, name))
     extra = _emb(spark).filter(F.col("vec_id") >= 400)
-    sc = spark.sparkContext
-    sc.setJobGroup("missing-state", "ivf_append with a missing state")
-    try:
-        missing = QUANTIZERS[name].state_name
+    missing = QUANTIZERS[name].state_name
+
+    def refused():
         with pytest.raises(ValueError, match=f"no {missing}"):
             ivf_append(spark, d, extra)
-        assert sc.statusTracker().getJobIdsForGroup("missing-state") == []
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
+
+    assert spark_jobs("missing-state", refused)[1] == []
