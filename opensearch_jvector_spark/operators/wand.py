@@ -191,8 +191,8 @@ def _maxscore(query, info, full, pruned, base: int, n_slots: int, mask, m: dict)
     transports share; they differ only in how a term's postings arrive.
 
     ``info`` maps each term present in the chunk to (score upper bound,
-    block count). ``full(t)`` gives the term's (docs, scores), ascending
-    by doc; ``pruned(t, cand_docs)`` gives at least the postings of the
+    block count). ``full(t)`` gives the term's (docs, scores), each doc
+    once; ``pruned(t, cand_docs)`` gives at least the postings of the
     sorted candidate docs (the Spark transport decodes only the blocks
     whose range meets a candidate). ``m`` collects the counters.
     Returns (chunk slots, scores), or None when no term is present."""
@@ -240,9 +240,11 @@ def _maxscore(query, info, full, pruned, base: int, n_slots: int, mask, m: dict)
             docs, scores = pruned(t, cand)
             if not len(docs) or not len(cand):
                 continue
-            pos = np.minimum(np.searchsorted(docs, cand), len(docs) - 1)
-            hit = docs[pos] == cand
-            acc[sel[hit]] += scores[pos[hit]]
+            # docs ascend within a slice only (a ranged build may
+            # interleave slices), so look each doc up among candidates
+            pos = np.minimum(np.searchsorted(cand, docs), len(cand) - 1)
+            hit = cand[pos] == docs
+            acc[docs[hit] - base] += scores[hit]
     else:
         sel = np.nonzero(touched)[0]
     m["candidates"] += len(sel)

@@ -179,35 +179,45 @@ def test_transports_match_bruteforce_through_writes(
 
 @pytest.fixture(scope="module")
 def small(spark, tmp_path_factory):
+    """A warmed ranged build over round-robin partitions: a term's
+    slices within a chunk interleave their doc ranges."""
     rng = np.random.default_rng(5)
     root = str(tmp_path_factory.mktemp("bm25small") / "idx")
     docs = pd.DataFrame({"doc_id": np.arange(150), "text": _texts(rng, 150, [])})
-    build_index(spark, spark.createDataFrame(docs), root, CFG)
-    return IndexStore(root).warm(spark)
+    frame = spark.createDataFrame(docs).repartition(7)
+    build_index(spark, frame, root, CFG, layout="ranged")
+    return IndexStore(root).warm(spark), docs
 
 
-def test_warm_batch_launches_no_spark_job(spark, small, spark_jobs):
-    """A warmed batch is answered on the driver: the only Spark job is
-    the caller's read of the result."""
-    qs = [Query(f"q{i}", (VOCAB[i], VOCAB[i + 3]), 10) for i in range(8)]
-    df, jobs = spark_jobs("bm25-warm", lambda: bm25_topk_batch(spark, small, qs))
+def test_warm_batch_on_ranged_layout(spark, small, spark_jobs, monkeypatch):
+    """A warmed batch is answered on the driver (the only Spark job is
+    the caller's read of the result), bitwise-equal to the Spark
+    transport and rank-identical to brute force."""
+    store, docs = small
+    qs = [Query(f"q{i}", tuple(VOCAB[i:i + 12:4]), 1 + i % 3 * 4) for i in range(8)]
+    df, jobs = spark_jobs("bm25-warm", lambda: bm25_topk_batch(spark, store, qs))
     assert jobs == []
-    assert len(df.collect()) == 8 * 10
+    rows = _rows(df)
+    with monkeypatch.context() as mp:
+        _capped(mp)
+        assert _rows(bm25_topk_batch(spark, store, qs)) == rows
+    _check_oracle(_oracle(spark, docs, qs), set(), qs, rows)
 
 
 def test_zero_row_results_keep_the_schema(spark, small, tmp_path):
     """Zero hits, an empty batch and a radial query nothing reaches all
     return zero rows with the exact result schema, on both engines."""
+    store = small[0]
     want = spark.createDataFrame([], RANKED).schema
     for df in (
-        bm25_topk_batch(spark, small, [Query("a", (ABSENT,), 5)]),
-        bm25_topk_batch(spark, small, []),
-        bm25_topk_batch(spark, small, [Query("r", (VOCAB[0],), None, 1e9)]),
+        bm25_topk_batch(spark, store, [Query("a", (ABSENT,), 5)]),
+        bm25_topk_batch(spark, store, []),
+        bm25_topk_batch(spark, store, [Query("r", (VOCAB[0],), None, 1e9)]),
     ):
         assert df.schema == want and df.collect() == []
     single = spark.createDataFrame([], "doc_id long, score double, rank int").schema
-    assert bm25_topk(spark, small, [ABSENT], 5).schema == single
-    assert bm25_radial(spark, small, [VOCAB[1]], 1e9).collect() == []
+    assert bm25_topk(spark, store, [ABSENT], 5).schema == single
+    assert bm25_radial(spark, store, [VOCAB[1]], 1e9).collect() == []
 
     rng = np.random.default_rng(0)
     X = rng.standard_normal((64, 4))
