@@ -23,13 +23,17 @@ reads, and through Spark jobs otherwise. The transport axis checks that
 both give bitwise the same rows, that a local call launches no Spark
 job before its result is read, that each reason to need Spark picks
 Spark, and that threads sharing the driver caches get the serial
-answers.
+answers. ``LocalIvfSearcher``, the in-process transport's batch of one,
+is checked against brute force directly, and with threads sharing one
+searcher while a delete lands.
 """
 
 from __future__ import annotations
 
+import shutil
 import sys
 import threading
+import time
 
 import numpy as np
 import pytest
@@ -65,13 +69,20 @@ CROSS = {
 }
 
 
-@pytest.fixture(scope="module")
-def data(spark, tmp_path_factory):
+def _vectors():
+    """(the seeded generator, the index's vectors, the permutation whose
+    first 150 and next 6 positions are the two duplicate groups)."""
     rng = np.random.default_rng(SEED)
     X = rng.normal(size=(N, DIM))
     ids = rng.permutation(N)
     X[ids[:150]] = X[ids[0]]  # more copies than the first-pass budget
     X[ids[150:156]] = X[ids[150]]
+    return rng, X, ids
+
+
+@pytest.fixture(scope="module")
+def data(spark, tmp_path_factory):
+    rng, X, ids = _vectors()
     emb = spark.createDataFrame(
         [(i, [float(x) for x in X[i]]) for i in range(N)],
         "vec_id long, embedding array<double>",
@@ -206,15 +217,23 @@ def test_batch_first_pass_cut_is_tie_safe(spark, data):
 
 
 @pytest.mark.parametrize("space", ["cosine", "l2", "innerproduct"])
-def test_exact_scorer_ties_duplicates_bitwise(space):
+def test_exact_scorer_ties_duplicates_bitwise(data, space):
     """Identical rows score bitwise-identically in every shape the
-    engine scores in — dense (rows x queries), (row, query) pairs and
-    the local searcher's single query — so duplicates tie and the
-    vec_id tie-break decides. A BLAS gemm blocks rows and can give
-    identical rows different last bits."""
+    engine scores in — dense (rows x queries) and (row, query) pairs —
+    so duplicates tie and the vec_id tie-break decides: the searcher's
+    full ranking holds each duplicate group's live copies side by side,
+    lowest id first, with one score. A BLAS gemm blocks rows and can
+    give identical rows different last bits."""
+    d, deleted, _, queries, _ = data
+    _, _, perm = _vectors()
+    searcher = LocalIvfSearcher(d, space=space)
+    for (_, q), group in zip(queries, (perm[:150], perm[150:156])):
+        got, s = searcher.query(q, N, n_probe=N_CELLS)
+        pos = np.flatnonzero(np.isin(got, group))
+        assert got[pos].tolist() == sorted(set(group.tolist()) - deleted)
+        assert np.array_equal(pos, np.arange(pos[0], pos[0] + len(pos)))
+        assert (s[pos] == s[pos[0]]).all()
     rng = np.random.default_rng(SEED)
-    local = LocalIvfSearcher.__new__(LocalIvfSearcher)
-    local.space = space
     for dim in (8, 17, 32, 128):
         for b in (50, 301, 1000):
             v = rng.normal(size=dim)
@@ -229,10 +248,87 @@ def test_exact_scorer_ties_duplicates_bitwise(space):
             r, c = np.nonzero(np.ones(S.shape, dtype=bool))
             paired = _np_exact_batch(M, norms, Q, qn, space, pairs=(r, c))
             assert np.array_equal(paired.reshape(S.shape), S), (dim, b)
-            for j, q in enumerate(Q):
-                one = local._score_cell(M, norms, {}, q, qn[j] or 1.0,
-                                        float((q * q).sum()))
-                assert np.array_equal(one, S[:, j]), (dim, b, j)
+
+
+@pytest.mark.parametrize("flt", ["none", "small", "large"])
+def test_searcher_matches_bruteforce(data, flt, spark_jobs):
+    """``LocalIvfSearcher`` called directly with every cell probed and
+    the filter as an id array: top-k and radial answers equal brute
+    force in its tie order (ids, and scores after the engine's
+    rounding), tombstones masked, with no Spark job."""
+    d, _, filters, queries, _ = data
+    allow = filters[flt]
+    allow = None if allow is None else np.asarray(allow, dtype=np.int64)
+    searcher = LocalIvfSearcher(d)
+
+    def answers():
+        out = []
+        for qid, q in queries:
+            truth = _truth(data, qid, flt)
+            t, within = _radius(truth)
+            for want, opts in ((truth[:K], {}), (within, {"min_score": t})):
+                ids, s = searcher.query(q, K, n_probe=N_CELLS, allow=allow,
+                                        **opts)
+                out.append((qid, want, list(zip(ids.tolist(),
+                                                _round6(s).tolist()))))
+        return out
+
+    got, jobs = spark_jobs(f"searcher-{flt}", answers)
+    assert jobs == []
+    for qid, want, rows in got:
+        assert rows == want, qid
+
+
+def test_threads_share_a_searcher_through_a_delete(data, tmp_path):
+    """Four threads query one searcher while ``ivf_delete`` lands: every
+    answer is the serial answer before or after the delete, and every
+    query that starts after the delete returned misses the deleted
+    ids."""
+    d = str(tmp_path / "idx")
+    shutil.copytree(data[0], d)
+    queries = [np.asarray(q) for _, q in data[3]]
+    searcher = LocalIvfSearcher(d)
+
+    def ask(q):
+        ids, s = searcher.query(q, K, n_probe=N_CELLS)
+        return ids.tolist(), s.tolist()
+
+    before = [ask(q) for q in queries]
+    victims = sorted({i for ids, _ in before for i in ids[:2]})
+    deleted, errors = threading.Event(), []
+    seen = [[] for _ in range(4)]
+
+    def worker(i):
+        try:
+            late = 0
+            while late < 3 * len(queries):
+                for j, q in enumerate(queries):
+                    after = deleted.is_set()
+                    seen[i].append((j, after, ask(q)))
+                    late += after
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    threads = [threading.Thread(target=worker, args=(i,)) for i in range(4)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        while min(map(len, seen)) < 2 * len(queries) and not errors:
+            time.sleep(1e-3)
+        ivf_delete(d, victims)
+        deleted.set()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    final = [ask(q) for q in queries]
+    assert not {i for ids, _ in final for i in ids} & set(victims)
+    for j, after, got in (x for per in seen for x in per):
+        assert got == final[j] if after else got in (before[j], final[j])
 
 
 # ------------------------------------------------------ transport axis

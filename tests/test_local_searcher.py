@@ -6,8 +6,8 @@ multi-index driver from growing without bound (round-4 verdict item).
 
 Covers: numpy-path result parity with the distributed exact path,
 staleness pickup (appends and deletes observed without rebinding),
-allow-list + radial semantics through the searcher, and _LRUBytes
-eviction accounting.
+allow-list + radial semantics through the searcher, the max_bytes
+refusal before any cell read, and _LRUBytes eviction accounting.
 """
 
 from __future__ import annotations
@@ -20,10 +20,12 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from opensearch_jvector_spark.operators import similarity as sim
 from opensearch_jvector_spark.operators.similarity import (
     LocalIvfSearcher,
     _LRUBytes,
     _round6,
+    ivf_append,
     ivf_build,
     ivf_delete,
     ivf_query,
@@ -108,12 +110,39 @@ def test_searcher_sees_deletes_without_rebinding(spark, tmp_path):
     ivf_delete(d, [victim])
     ids1, _ = s.query(np.asarray(q, dtype=np.float64), 5, n_probe=4)
     assert victim not in ids1.tolist()
-    # frozen mode skips the staleness sweep — the stale answer is the
-    # documented contract there (pure benchmark loops)
-    ids2, _ = s.query(
-        np.asarray(q, dtype=np.float64), 5, n_probe=4, check_stale=False
-    )
-    assert len(ids2) == 5
+    assert len(ids1) == 5
+
+
+def test_searcher_sees_appends_without_rebinding(spark, tmp_path):
+    d = str(tmp_path / "idx")
+    ivf_build(_emb(spark).limit(400), d, n_centroids=4, kmeans_iters=1)
+    q = _qvec(spark, 0)
+    s = LocalIvfSearcher(d)
+    ids0, _ = s.query(np.asarray(q, dtype=np.float64), 5, n_probe=4)
+    new = [10_000, 10_001, 10_002]
+    ivf_append(spark, d, spark.createDataFrame(
+        [(i, q) for i in new], "vec_id long, embedding array<double>"
+    ))
+    ids1, scores1 = s.query(np.asarray(q, dtype=np.float64), 5, n_probe=4)
+    assert not set(new) & set(ids0.tolist())
+    # copies of the query tie at the top, lowest id first
+    top = [i for i, sc in zip(ids1.tolist(), scores1) if sc == scores1[0]]
+    assert set(new) <= set(top) and top == sorted(top)
+
+
+def test_searcher_max_bytes_refuses_before_any_read(spark, ivf_dir):
+    """The byte budget is checked from footers before any cell is
+    read, so a refused query leaves the driver cache as it was."""
+    def cached():
+        return [key for key in list(sim._LOCAL_IVF_CACHE._d)
+                if key[0] == ivf_dir]
+
+    for key in cached():
+        sim._LOCAL_IVF_CACHE.pop(key)
+    q = np.asarray(_qvec(spark, 0), dtype=np.float64)
+    with pytest.raises(ValueError, match="max_bytes=16"):
+        LocalIvfSearcher(ivf_dir, max_bytes=16).query(q, 5, n_probe=4)
+    assert cached() == []
 
 
 # --------------------------------------------------------------- LRU
