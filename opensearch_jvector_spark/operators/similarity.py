@@ -292,21 +292,31 @@ def cosine_topk_bruteforce(
 
 # ---------------------------------------------------------------- IVF
 
+def _centroid_norms(C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The centroid side of ``_np_space_scores``: (|c| with 0 read as
+    1, |c|^2) per row, computed once per centroid table by the probe's
+    callers and passed back as ``norms``."""
+    cn = np.linalg.norm(C, axis=1)
+    return np.where(cn == 0, 1.0, cn), (C * C).sum(axis=1)
+
+
 def _np_space_scores(
-    M: np.ndarray, C: np.ndarray, space: str
+    M: np.ndarray, C: np.ndarray, space: str, norms: tuple | None = None
 ) -> np.ndarray:
     """(b, n_centroids) scores of batch M against centroid matrix C —
     higher = closer. Monotone distance forms are enough for argmax.
     l1/linf materialize a (b, n, d) diff tensor — fine for centroid
-    matrices (n small), never used row-vs-row."""
+    matrices (n small), never used row-vs-row. ``norms`` is
+    ``_centroid_norms(C)`` when the caller holds it."""
     if space == "cosine":
         mn = np.linalg.norm(M, axis=1)
-        cn = np.linalg.norm(C, axis=1)
         mn[mn == 0] = 1.0
-        return (M @ C.T) / np.outer(mn, np.where(cn == 0, 1.0, cn))
+        cn = (norms or _centroid_norms(C))[0]
+        return (M @ C.T) / np.outer(mn, cn)
     if space == "l2":
         # -(|m|^2 - 2 m.c + |c|^2); argmax == nearest
-        return 2.0 * (M @ C.T) - (C * C).sum(axis=1)[None, :] - (
+        c2 = (norms or _centroid_norms(C))[1]
+        return 2.0 * (M @ C.T) - c2[None, :] - (
             (M * M).sum(axis=1)[:, None]
         )
     if space == "innerproduct":
@@ -732,6 +742,12 @@ def _check_format(index_dir: str) -> None:
 
 
 def _load_centroids(index_dir: str) -> tuple[np.ndarray, np.ndarray]:
+    return _centroid_table(index_dir)[:2]
+
+
+def _centroid_table(index_dir: str) -> tuple:
+    """(cell ids, centroid matrix, ``_centroid_norms``) of the flat
+    centroid table, parsed once per file signature."""
     import pyarrow.parquet as papq
 
     d = os.path.join(index_dir, "centroids")
@@ -744,15 +760,17 @@ def _load_centroids(index_dir: str) -> tuple[np.ndarray, np.ndarray]:
     )
     hit = _CENTROID_CACHE.get(index_dir)
     if hit is not None and hit[0] == sig:
-        return hit[1], hit[2]
+        return hit[1:]
     _check_format(index_dir)  # once per (re)parse, never per query
     cent = papq.read_table(d)
     cells = np.asarray(cent["cell"].to_pylist(), dtype=np.int64)
     C = np.array(cent["c"].to_pylist(), dtype=np.float64)
+    norms = _centroid_norms(C)
     _CENTROID_CACHE.put(
-        index_dir, (sig, cells, C), C.nbytes + cells.nbytes
+        index_dir, (sig, cells, C, norms),
+        C.nbytes + cells.nbytes + 2 * norms[0].nbytes,
     )
-    return cells, C
+    return cells, C, norms
 
 
 def _probe_cells(
@@ -798,22 +816,24 @@ def _probe_batch(
             )
             for qv in Q
         ]
-    cells, C = _load_centroids(index_dir)
+    cells, C, norms = _centroid_table(index_dir)
     if metrics is not None:
         metrics["centroids_scored"] = (
             metrics.get("centroids_scored", 0) + len(cells) * len(Q)
         )
-    return _probe_rows(cells, C, Q, n_probe, space)
+    return _probe_rows(cells, C, Q, n_probe, space, norms)
 
 
-def _probe_rows(cells, C, Q, n_probe: int, space: str) -> list[list[int]]:
+def _probe_rows(
+    cells, C, Q, n_probe: int, space: str, norms: tuple | None = None
+) -> list[list[int]]:
     """Each query's ``n_probe`` best cells of a flat centroid table
     (ties to the lower cell id), scored as a one-row
     ``_np_space_scores`` call so a query's cells are bitwise the same
     alone and inside any batch."""
     out = []
     for qv in Q:
-        sims = _np_space_scores(qv[None, :], C, space)[0]
+        sims = _np_space_scores(qv[None, :], C, space, norms)[0]
         order = np.lexsort((cells, -sims))[:n_probe]
         out.append(sorted(cells[order].tolist()))
     return out
@@ -1552,13 +1572,15 @@ def _ivf_search(
             reason = str(e)
     if reason is None:
         note["transport"] = "local"
-        pdf = pd.DataFrame({
-            "query_id": np.asarray(qids, dtype=object)[qi],
+        cols = {
+            "query_id": pa.array(qids, pa.string()).take(qi),
             "vec_id": vid,
             score_name: _round6(s),
             "rank": rank.astype(np.int32),
-        })
-        return pdf if spark is None else arrow_frame(spark, result, pdf)
+        }
+        if spark is None:
+            return pa.table(cols, schema=result).to_pandas()
+        return arrow_frame(spark, result, cols)
     note.update(transport="spark", transport_reason=reason)
     deny = (tombs[1], tombs[2], index_dir) if tombs[1] else None
     if spark is None:
@@ -1914,8 +1936,9 @@ def ivf_query(
     many rows is exact-scored whole — decided from parquet footers with
     an early exit, so big indexes never pay a metadata sweep.
 
-    Transport: the query runs in-process, with no Spark job before the
-    caller reads the result, when the cells it reads hold at most
+    Transport: the query runs in-process, with no Spark job (its
+    result is driver-held, ``session.arrow_frame``), when the cells it
+    reads hold at most
     ``LOCAL_IVF_MAX_BYTES`` of vectors, the tombstones fit a driver id
     array and ``filter_ids`` is not a DataFrame above
     ``filtered_exact_threshold``; otherwise it runs as Spark jobs. Both
@@ -2296,13 +2319,13 @@ class LocalIvfSearcher:
         self._bind()
 
     def _bind(self) -> None:
-        """Recover crashed cell swaps and bind (cell ids, centroids) as
-        one tuple; (None, None) on a coarse index, whose probe never
-        materializes the full centroid table."""
+        """Recover crashed cell swaps and bind (cell ids, centroids,
+        their norms) as one tuple; all None on a coarse index, whose
+        probe never materializes the full centroid table."""
         _recover_cell_swaps(os.path.join(self.index_dir, "cells"))
         self._centroids = (
-            (None, None) if _has_coarse(self.index_dir)
-            else _load_centroids(self.index_dir)
+            (None, None, None) if _has_coarse(self.index_dir)
+            else _centroid_table(self.index_dir)
         )
 
     @property
@@ -2311,12 +2334,12 @@ class LocalIvfSearcher:
 
     def probe(self, qv: np.ndarray, n_probe: int) -> list[int]:
         """Same cell choice as the engine's ``_probe_cells``."""
-        cells, C = self._centroids
+        cells, C, norms = self._centroids
         if cells is None:
             return _probe_cells_two_level(
                 self.index_dir, qv, n_probe, self.space
             )
-        return _probe_rows(cells, C, qv[None, :], n_probe, self.space)[0]
+        return _probe_rows(cells, C, qv[None, :], n_probe, self.space, norms)[0]
 
     def query(
         self,
@@ -2519,7 +2542,8 @@ def _ivf_append_tagged(
 #: (no driver materialization)
 _TOMB_ISIN_MAX = 100_000
 
-#: (index_dir) -> (sig, n, ids) tombstone snapshots, LRU by id bytes
+#: (index_dir) -> (sorted file names, n, ids) tombstone snapshots, LRU
+#: by id bytes
 TOMB_CACHE_MAX_BYTES = 256 << 20
 _TOMB_CACHE = _LRUBytes(TOMB_CACHE_MAX_BYTES)
 
@@ -2528,8 +2552,8 @@ def _tombstone_info(index_dir: str) -> tuple[int, np.ndarray | None]:
     """(n_tombstoned, ids|None) — ids materialize driver-side only when
     the set is small enough for an In() predicate; above that only the
     footer row count is read and queries anti-join the tombstone files.
-    Cached on the tombstone directory's file signature, so deletes and
-    compactions invalidate naturally."""
+    Cached on the tombstone files' names, so deletes and compactions
+    invalidate naturally."""
     return _tombstone_snapshot(index_dir)[1:]
 
 
@@ -2540,16 +2564,17 @@ def _tombstone_snapshot(index_dir: str) -> tuple:
     d = os.path.join(index_dir, "tombstones")
     if not os.path.isdir(d):
         return None, 0, None
-    sig = _cell_dir_sig(d)
+    # the file names hash their ids (``ivf_delete``), so the sorted
+    # names are the ledger's version; a directory stat is not (a file
+    # added within the mtime granularity leaves it unchanged)
+    sig = tuple(sorted(f for f in os.listdir(d) if f.endswith(".parquet")))
     hit = _TOMB_CACHE.get(index_dir)
     if hit is not None and hit[0] == sig:
         return hit
     import pyarrow as pa
     import pyarrow.parquet as papq
 
-    files = [
-        os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
-    ]
+    files = [os.path.join(d, f) for f in sig]
     n = sum(papq.ParquetFile(p).metadata.num_rows for p in files)
     ids = None
     # raw footer rows overcount when delete batches overlap, so read

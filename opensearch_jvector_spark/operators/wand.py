@@ -32,8 +32,9 @@ transport is steps 2-4 above. The driver transport (``_local_topk``)
 answers when a warmed store holds the norms, the batch is unfiltered
 and its postings fit ``driver_topk_max_postings``: one pyarrow read,
 one decode and one scoring of the whole batch's postings, the loop per
-(chunk, query), one lexsort for the ranks, and no Spark job until the
-caller reads the result. Both give bitwise-identical rows.
+(chunk, query), one lexsort for the ranks, and a driver-held result
+(``session.arrow_frame``), so no Spark job runs, the caller's
+``toPandas`` included. Both give bitwise-identical rows.
 
 Filtered search (reference acceptDocs, JVectorReader.java:167-182)
 pushes the allow-bitmap INSIDE the MaxScore loop — the mask only
@@ -404,7 +405,8 @@ def _local_topk(
     upper bound per (chunk, term); then the shared ``_maxscore`` loop
     per (chunk, query) over the warmed driver norms, with tombstones
     as a per-chunk deny mask, and one lexsort that ranks the batch.
-    No Spark job runs until the caller reads the result."""
+    The result is held on the driver (``session.arrow_frame``): no
+    Spark job runs, the caller's ``toPandas`` included."""
     k1, b = config.k1, config.b
     norms = store._driver_norms
     tbl = store.read_postings_arrow(list(idfs), config, stats)

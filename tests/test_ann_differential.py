@@ -21,7 +21,7 @@ and a single query is the batch of one of the same engine.
 The engine answers in-process when the driver can hold what a query
 reads, and through Spark jobs otherwise. The transport axis checks that
 both give bitwise the same rows, that a local call launches no Spark
-job before its result is read, that each reason to need Spark picks
+job, the caller's read of its result included, that each reason to need Spark picks
 Spark, and that threads sharing the driver caches get the serial
 answers. ``LocalIvfSearcher``, the in-process transport's batch of one,
 is checked against brute force directly, and with threads sharing one
@@ -386,19 +386,19 @@ def test_transports_agree_bitwise(spark, data, flt, monkeypatch):
 
 
 def test_local_batch_runs_no_spark_job(spark, data, spark_jobs):
-    """A batch the driver can hold is answered before any Spark job:
-    the only job is the caller's read of the result."""
+    """A batch the driver can hold is answered with no Spark job, the
+    caller's ``toPandas`` of the result included."""
     d, _, filters, queries, _ = data
     for flag, flt in ((None, "none"), ("use_pq", "large"), ("use_sq", "none")):
         m = {}
-        df, jobs = spark_jobs(f"local-{flag}", lambda: ivf_query_batch(
+        pdf, jobs = spark_jobs(f"local-{flag}", lambda: ivf_query_batch(
             spark, d, queries, K, n_probe=1, filter_ids=filters[flt],
             filtered_exact_threshold=SMALL_MAX, metrics=m,
             **({flag: True} if flag else {}),
-        ))
+        ).toPandas())
         assert jobs == [] and m["transport"] == "local", (flag, jobs, m)
         assert "transport_reason" not in m
-        assert len(df.collect()) == K * len(queries)
+        assert len(pdf) == K * len(queries)
         if flag:  # the first pass keeps its footer accounting
             assert m["bytes_scanned"] > 0 < m["compression_ratio"], m
 

@@ -2,12 +2,14 @@
 
 Seeded random corpora with duplicated documents (so scores tie
 exactly), random queries with k in {1, 10, 100}, terms missing from the
-dictionary and radial ``min_score``. After build, append, delete and
-fold, every query runs through both transports of ``bm25_topk_batch``:
-the driver one (warmed store, no Spark job before the caller's read)
-and the Spark one (forced by capping ``driver_topk_max_postings`` at
-0). The two must return bitwise-equal rows, and both must be
-rank-identical to ``bm25_topk_bruteforce`` over the live corpus.
+dictionary and radial ``min_score``. After build, append, delete,
+compaction and fold, every query runs through both transports of
+``bm25_topk_batch``: the driver one (warmed store, no Spark job, the
+caller's ``toPandas`` included) and the Spark one (forced by capping
+``driver_topk_max_postings`` at 0). The two must return bitwise-equal
+rows, and both must be rank-identical to ``bm25_topk_bruteforce`` over
+the live corpus. Filtered batches (a small and a large doc-id
+allow-list DataFrame) are checked against the same oracle.
 
 Also here: the zero-row results keep the exact result schema, and the
 driver's batch decode refuses corrupt posting rows.
@@ -25,7 +27,7 @@ import pytest
 from opensearch_jvector_spark.config import EngineConfig
 from opensearch_jvector_spark.functions.codec import decode_blocks, encode_blocks
 from opensearch_jvector_spark.operators.bruteforce import bm25_topk_bruteforce
-from opensearch_jvector_spark.operators.delete import delete_docs
+from opensearch_jvector_spark.operators.delete import compact_deletes, delete_docs
 from opensearch_jvector_spark.operators.merge import fold_deltas
 from opensearch_jvector_spark.operators.segment_build import build_index
 from opensearch_jvector_spark.operators.similarity import (
@@ -118,12 +120,14 @@ def _oracle(spark, docs: pd.DataFrame, queries) -> dict[str, list]:
     return out
 
 
-def _check_oracle(oracle, deleted, queries, rows):
+def _check_oracle(oracle, hidden, queries, rows):
+    """``rows`` rank-identical to the oracle's, minus ``hidden`` docs
+    (deleted, or outside an allow-list)."""
     got: dict[str, list] = {q.query_id: [] for q in queries}
     for qid, d, s, _ in rows:
         got[qid].append((d, s))
     for q in queries:
-        want = [(d, s) for d, s in oracle[q.query_id] if d not in deleted]
+        want = [(d, s) for d, s in oracle[q.query_id] if d not in hidden]
         want = sorted(_canon(want), key=lambda x: (-x[0], x[1]))
         if q.k is not None:
             want = want[: q.k]
@@ -147,15 +151,32 @@ def test_transports_match_bruteforce_through_writes(
     queries = _queries(rng, 12)
     deleted: set[int] = set()
 
+    single = queries[1]  # k=10
+    frng = np.random.default_rng([seed, 1])  # allow-lists
+
     def check(stage, oracle):
         store.warm(spark)
-        driver, jobs = spark_jobs(f"bm25-{stage}", lambda: bm25_topk_batch(spark, store, queries))
+        (driver, one, none), jobs = spark_jobs(f"bm25-{stage}", lambda: (
+            _rows(bm25_topk_batch(spark, store, queries)),
+            bm25_topk(spark, store, list(single.terms), single.k).toPandas(),
+            bm25_topk(spark, store, [ABSENT], 10).toPandas(),
+        ))
         assert jobs == [], stage
-        driver = _rows(driver)
+        assert none.empty and list(none.columns) == ["doc_id", "score", "rank"]
+        _check_oracle(oracle, deleted, [single], [
+            (single.query_id, d, s, r)
+            for d, s, r in zip(one["doc_id"], one["score"], one["rank"])
+        ])
         with monkeypatch.context() as mp:
             _capped(mp)
             assert _rows(bm25_topk_batch(spark, store, queries)) == driver, stage
         _check_oracle(oracle, deleted, queries, driver)
+        ids = docs["doc_id"].to_numpy()
+        for n in (8, len(ids) * 3 // 5):  # a small and a large allow-list
+            allow = set(frng.choice(ids, n, replace=False).tolist())
+            flt = spark.createDataFrame(pd.DataFrame({"doc_id": sorted(allow)}))
+            rows = _rows(bm25_topk_batch(spark, store, queries, filter_docs=flt))
+            _check_oracle(oracle, deleted | (set(ids.tolist()) - allow), queries, rows)
 
     check("build", _oracle(spark, docs, queries))
     first = (len(base) - 1) // CFG.docs_per_chunk * CFG.docs_per_chunk + CFG.docs_per_chunk
@@ -173,6 +194,10 @@ def test_transports_match_bruteforce_through_writes(
     deleted = set(rng.choice(docs["doc_id"].to_numpy(), 40, replace=False).tolist())
     delete_docs(spark, store, sorted(deleted), batch_tag="del")
     check("delete", oracle)
+    # compaction drops the deleted docs from the corpus stats too
+    compact_deletes(spark, store, spark.createDataFrame(docs))
+    oracle = _oracle(spark, docs[~docs["doc_id"].isin(deleted)], queries)
+    check("compact", oracle)
     fold_deltas(spark, store)
     check("fold", oracle)
 
@@ -190,14 +215,13 @@ def small(spark, tmp_path_factory):
 
 
 def test_warm_batch_on_ranged_layout(spark, small, spark_jobs, monkeypatch):
-    """A warmed batch is answered on the driver (the only Spark job is
-    the caller's read of the result), bitwise-equal to the Spark
+    """A warmed batch is answered on the driver with no Spark job, the
+    caller's read of the result included, bitwise-equal to the Spark
     transport and rank-identical to brute force."""
     store, docs = small
     qs = [Query(f"q{i}", tuple(VOCAB[i:i + 12:4]), 1 + i % 3 * 4) for i in range(8)]
-    df, jobs = spark_jobs("bm25-warm", lambda: bm25_topk_batch(spark, store, qs))
+    rows, jobs = spark_jobs("bm25-warm", lambda: _rows(bm25_topk_batch(spark, store, qs)))
     assert jobs == []
-    rows = _rows(df)
     with monkeypatch.context() as mp:
         _capped(mp)
         assert _rows(bm25_topk_batch(spark, store, qs)) == rows

@@ -222,3 +222,80 @@ def test_local_cell_cache_evicts_across_indexes(spark, tmp_path):
         assert r2["vec_id"].tolist()  # sanity
     finally:
         sim._LOCAL_IVF_CACHE = old
+
+
+# ------------------------------------------------- probe and tombstones
+
+
+def _scores_before_norm_cache(M, C, space):
+    """``_np_space_scores`` as it computed every centroid norm per call."""
+    if space == "cosine":
+        mn = np.linalg.norm(M, axis=1)
+        cn = np.linalg.norm(C, axis=1)
+        mn[mn == 0] = 1.0
+        return (M @ C.T) / np.outer(mn, np.where(cn == 0, 1.0, cn))
+    if space == "l2":
+        return 2.0 * (M @ C.T) - (C * C).sum(axis=1)[None, :] - (
+            (M * M).sum(axis=1)[:, None]
+        )
+    return sim._np_space_scores(M, C, space)
+
+
+@pytest.mark.parametrize("space", sim.SPACES)
+def test_probe_with_cached_norms_is_bitwise_unchanged(space):
+    """Centroid norms computed once per table give bitwise the scores,
+    and so the cells, of norms computed per query; a zero centroid and
+    a zero query included."""
+    rng = np.random.default_rng(7)
+    C = rng.normal(size=(40, 24))
+    C[5] = 0.0
+    C[9] = C[3]  # a tie the lower cell id wins
+    Q = rng.normal(size=(30, 24))
+    Q[0] = 0.0
+    Q[1] = C[3]
+    cells = rng.permutation(100)[:40].astype(np.int64)
+    norms = sim._centroid_norms(C)
+    for qv in Q:
+        got = sim._np_space_scores(qv[None, :], C, space, norms)
+        want = _scores_before_norm_cache(qv[None, :], C, space)
+        assert got.tobytes() == want.tobytes(), space
+    for n_probe in (1, 4, 40):
+        want = [
+            sorted(cells[np.lexsort((cells, -_scores_before_norm_cache(
+                qv[None, :], C, space)[0]))[:n_probe]].tolist())
+            for qv in Q
+        ]
+        assert sim._probe_rows(cells, C, Q, n_probe, space, norms) == want
+
+
+def test_centroid_norms_are_cached_with_the_table(ivf_dir):
+    cells, C, norms = sim._centroid_table(ivf_dir)
+    assert sim._centroid_table(ivf_dir)[2] is norms
+    assert LocalIvfSearcher(ivf_dir)._centroids[2] is norms
+    for got, want in zip(norms, sim._centroid_norms(C)):
+        assert got.tobytes() == want.tobytes()
+
+
+def test_tombstone_snapshot_sees_a_file_the_dir_stat_misses(tmp_path):
+    """A tombstone file that lands without moving the directory's
+    mtime (a coarse clock, or a read between ``ivf_delete``'s write and
+    rename) is still seen: the snapshot keys on the file names."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    d = tmp_path / "idx"
+    t = d / "tombstones"
+    t.mkdir(parents=True)
+    papq.write_table(pa.table({"vec_id": pa.array([4, 2], pa.int64())}),
+                     str(t / "tomb_a.parquet"))
+    st = os.stat(t)
+    sim._TOMB_CACHE.pop(str(d), None)
+    try:
+        assert sim._tombstone_snapshot(str(d))[2].tolist() == [2, 4]
+        papq.write_table(pa.table({"vec_id": pa.array([9], pa.int64())}),
+                         str(t / "tomb_b.parquet"))
+        os.utime(t, ns=(st.st_atime_ns, st.st_mtime_ns))
+        _, n, ids = sim._tombstone_snapshot(str(d))
+        assert n == 3 and ids.tolist() == [2, 4, 9]
+    finally:
+        sim._TOMB_CACHE.pop(str(d), None)
